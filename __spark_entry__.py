@@ -1253,7 +1253,7 @@ def knn_dtw_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     (neighbors.py:353-562 kneighbors + :502-531 vote).
 
     Runs the REAL distributed path — broadcast train, mixed-shape
-    banded batch DP (kernels.py:248 dtw_banded_batch), tie-aware top-k,
+    banded batch DP (kernels.dtw_index_batch), tie-aware top-k,
     majority vote — on floor()-quantized integer series (lengths 12..16
     by user, sakoe_chiba_radius=5, labels user_id % 3).  On integer
     values every DP cell is an exact integer (the row-scan cumsum trick

@@ -1,153 +1,270 @@
-/* Banded / unconstrained DTW over a batch of variable-length pairs.
+/* Banded / unconstrained DTW over index-addressed pairs of two flattened
+ * series sets.
  *
- * Scalar C twin of kernels.dtw_banded_batch_mixed /
- * dtw_full_batch_mixed: the same DP, evaluated pair-at-a-time instead
- * of lane-vectorized across the batch.  BIT-IDENTICAL to the numpy
- * kernels on the non-abandoned path — the per-cell float association
- * is replicated exactly:
+ * Inputs.  A series set is (buf, off, len): series q occupies
+ * buf[off[q] .. off[q] + len[q] * d), row-major (time, dim).  Pair p is
+ * (A series ia[p], B series ib[p]); out[p] receives its DTW distance.
+ * Callers pass pair lists without per-pair copies: the kNN broadcast
+ * path hands query-major pairs over a length-sorted train set, the list
+ * wrapper (ckernel.dtw_batch) flattens once and passes pairs sorted by
+ * (la - lb, la).  Both orders keep neighbouring pairs' windows alike,
+ * which is what the lane layout below needs.
  *
- *   the numpy kernels vectorize the in-row `left` dependence with the
- *   prefix identity  row[k] = s[k] + min_{j<=k}(a[j] - s[j])  where
- *   s = inclusive cumsum(Dw) and a[k] = Dw[k] + min(up, diag); this
- *   file computes the SAME expressions in the SAME order (sequential
- *   running sum s, running min m of (a - s), row[k] = s + m), so every
- *   intermediate double rounds identically.  min/sqrt are exact IEEE
- *   ops; compile with -ffp-contract=off so no FMA re-rounds the
- *   subtract-square local cost.
+ * Lane layout.  Pairs run LANES (12) at a time.  The DP rows of all
+ * lanes advance together in absolute column coordinates; every row
+ * buffer is stored [column][lane], so one column of the row is 12
+ * contiguous doubles (three 4-wide AVX2 vectors).  Each lane keeps its
+ * own Sakoe-Chiba window [lo, hi]; a column outside it is masked per
+ * lane (left of lo: running state reset; right of hi: +inf).  The row
+ * sweep is the union of the live lanes' windows; columns inside every
+ * live lane's window skip the masks.  The in-row `left` dependence is a
+ * serial chain per lane, but the 12 lanes are independent chains, so
+ * the sweep is bound by throughput rather than by one chain's latency.
+ * The B side of a group is transposed into the same [column][dim][lane]
+ * layout once per group; the A side is gathered once per row.
  *
- * tau2 early abandon: a pair whose running band minimum exceeds its
- * cap is reported +inf immediately (the numpy kernel defers the inf
- * until a batch compaction fires, so it sometimes returns the true
+ * Vector widths.  The row sweep is one macro body instantiated twice:
+ * 4-wide for AVX2 (target attribute) and 2-wide for the x86-64 baseline
+ * (SSE2), picked once per call with __builtin_cpu_supports.  A single
+ * 4-wide body under target_clones would not do: GCC lowers 32-byte
+ * vector compares piecewise on SSE2, and that clone ran ~10x slower
+ * than the 2-wide instantiation.  Every min is the minpd instruction,
+ * which computes exactly `x < y ? x : y`.
+ *
+ * Numerics.  BIT-IDENTICAL to the numpy kernels
+ * (kernels.dtw_banded_batch_mixed / dtw_full_batch_mixed) on the
+ * non-abandoned path: the numpy kernels vectorize the in-row `left`
+ * dependence with the prefix identity
+ *     row[k] = s[k] + min_{j<=k}(a[j] - s[j]),
+ * s = inclusive cumsum(Dw), a[k] = Dw[k] + min(up, diag), and this file
+ * computes the SAME expressions in the SAME order (sequential running
+ * sum s, running min m of (a - s), row = s + m), so every intermediate
+ * double rounds identically.  Row 0 runs the same update against a
+ * virtual previous row that is 0 at column -1 and +inf elsewhere, which
+ * gives m = 0 and row = s, i.e. numpy's cumsum row.  min/sqrt are exact
+ * IEEE ops; compile with -ffp-contract=off so no FMA re-rounds the
+ * subtract-square local cost.
+ *
+ * tau2 early abandon: a pair whose running band minimum exceeds its cap
+ * after a row is reported +inf immediately (the numpy kernel defers the
+ * inf until a batch compaction fires, so it sometimes returns the true
  * value instead — callers treat both as "provably worse than the
  * current top-k", and tests pin that either answer is accepted).
  *
- * radius < 0 means unconstrained (full window): wlo/whi are set so
- * cur_lo == 0 and hi == lb-1 on every row, which reduces the
- * recurrence to _dtw_full_core's exactly.
+ * radius < 0 means unconstrained (full window): wlo/whi are set so lo
+ * == 0 and hi == lb-1 on every row.
  */
 #include <math.h>
 #include <stdlib.h>
 
-void dtw_batch(const double *bufA, const long long *offA, const long long *lenA,
-               const double *bufB, const long long *offB, const long long *lenB,
-               long long n, long long d, long long radius,
-               const double *tau2, double *out)
-{
-    long long wmax = 1, p;
-    for (p = 0; p < n; p++) {
-        long long la = lenA[p], lb = lenB[p], wlo, whi, W;
-        if (radius < 0) { wlo = la; whi = lb; }
-        else if (la > lb) { wlo = la - lb + radius; whi = radius; }
-        else { wlo = radius; whi = lb - la + radius; }
-        W = wlo + whi + 1;
-        if (W > lb) W = lb;
-        if (W > wmax) wmax = W;
+#define LANES 12
+
+/* The row sweep is written once, as the macros below, and stamped out
+ * per vector width W (doubles per vector; LANES / W vectors per column)
+ * with the vector types vd/vm and the exact min VMIN of that width.
+ * Selects are mask arithmetic because C has no vector ?:.
+ *
+ * DTW_SWEEP runs columns [j0, j1] of one DP row.  The running state
+ * (s, m) and the row minimum mn live in vd arrays of the enclosing
+ * function.  MASKED applies the per-lane windows: left of lo the lane's
+ * running state is held at its row-start value (s = 0, m = +inf), right
+ * of hi its cell is +inf.  Columns inside every live lane's window skip
+ * both masks. */
+#define SEL(mask, x, y) ((vd) (((mask) & (vm) (x)) | (~(mask) & (vm) (y))))
+
+#define DTW_SWEEP(VMIN, j0, j1, D, MASKED)                                   \
+    for (long long j = (j0); j <= (j1); j++) {                               \
+        const double *b = Bt + j * (D) * LANES;                              \
+        const double *up = P + (j + 1) * LANES;                              \
+        const double *dg = P + j * LANES;                                    \
+        double *r = R + (j + 1) * LANES;                                     \
+        vd jd = zero + (double) j;                                           \
+        for (int v = 0; v < LANES / W; v++) {                                \
+            vd dw = zero;                                                    \
+            for (long long dim = 0; dim < (D); dim++) {                      \
+                vd t = *(const vd *) (a + dim * LANES + W * v)               \
+                    - *(const vd *) (b + dim * LANES + W * v);               \
+                dw += t * t;                                                 \
+            }                                                                \
+            vd u = *(const vd *) (up + W * v);                               \
+            vd g = *(const vd *) (dg + W * v);                               \
+            vd av = dw + VMIN(u, g);                                         \
+            vd sn = s[v] + dw;                                               \
+            vd t = av - sn;                                                  \
+            vd mm = VMIN(t, m[v]);                                           \
+            vd rv;                                                           \
+            if (MASKED) {                                                    \
+                vm lead = jd < vlo[v];                                       \
+                s[v] = (vd) (~lead & (vm) sn);                               \
+                m[v] = SEL(lead, inf, mm);                                   \
+                rv = SEL(jd > vhi[v], inf, s[v] + m[v]);                     \
+            } else {                                                         \
+                s[v] = sn;                                                   \
+                m[v] = mm;                                                   \
+                rv = sn + mm;                                                \
+            }                                                                \
+            *(vd *) (r + W * v) = rv;                                        \
+            mn[v] = VMIN(rv, mn[v]);                                         \
+        }                                                                    \
     }
-    double *prev = (double *) malloc((size_t) wmax * sizeof(double));
-    double *row = (double *) malloc((size_t) wmax * sizeof(double));
-    if (prev == NULL || row == NULL) {
+
+/* One DP row of a lane group over columns [jlo, jhi]; [jin, jout] is
+ * inside every live lane's window (empty when jin > jout).  P/R point at
+ * column -1 of the previous/current row; a holds this row's A values
+ * [dim][lane]; lo/hi are the lanes' windows as doubles (SSE2 has no
+ * 64-bit integer compare); rmin receives each lane's row minimum. */
+#define DTW_ROW_BODY(VMIN, D)                                                \
+    if (jin > jout) {                                                        \
+        DTW_SWEEP(VMIN, jlo, jhi, D, 1)                                      \
+    } else {                                                                 \
+        DTW_SWEEP(VMIN, jlo, jin - 1, D, 1)                                  \
+        DTW_SWEEP(VMIN, jin, jout, D, 0)                                     \
+        DTW_SWEEP(VMIN, jout + 1, jhi, D, 1)                                 \
+    }
+
+#define DEFINE_DTW_ROW(NAME, ATTR, WIDTH, VMIN)                              \
+ATTR static void                                                             \
+NAME(const double *restrict Bt, const double *restrict P,                    \
+     double *restrict R, const double *restrict a,                           \
+     const double *restrict lo, const double *restrict hi,                   \
+     double *restrict rmin, long long jlo, long long jhi,                    \
+     long long jin, long long jout, long long d)                             \
+{                                                                            \
+    enum { W = WIDTH };                                                      \
+    typedef double vd __attribute__((vector_size(8 * W)));                   \
+    typedef long long vm __attribute__((vector_size(8 * W)));                \
+    const vd zero = {0.0};                                                   \
+    const vd inf = zero + INFINITY;                                          \
+    vd s[LANES / W], m[LANES / W], mn[LANES / W];                            \
+    vd vlo[LANES / W], vhi[LANES / W];                                       \
+    for (int v = 0; v < LANES / W; v++) {                                    \
+        s[v] = zero;                                                         \
+        m[v] = inf;                                                          \
+        mn[v] = inf;                                                         \
+        vlo[v] = *(const vd *) (lo + W * v);                                 \
+        vhi[v] = *(const vd *) (hi + W * v);                                 \
+    }                                                                        \
+    if (d == 1) {                                                            \
+        DTW_ROW_BODY(VMIN, 1)                                                \
+    } else {                                                                 \
+        DTW_ROW_BODY(VMIN, d)                                                \
+    }                                                                        \
+    for (int v = 0; v < LANES / W; v++)                                      \
+        *(vd *) (rmin + W * v) = mn[v];                                      \
+}
+
+DEFINE_DTW_ROW(dtw_row_avx2, __attribute__((target("avx2"))), 4,
+               __builtin_ia32_minpd256)
+DEFINE_DTW_ROW(dtw_row_sse2, , 2, __builtin_ia32_minpd)
+
+void dtw_index(const double *bufA, const long long *offA, const long long *lenA,
+               const double *bufB, const long long *offB, const long long *lenB,
+               const long long *ia, const long long *ib, long long n,
+               long long d, long long radius, const double *tau2, double *out)
+{
+    void (*row_fn)(const double *, const double *, double *, const double *,
+                   const double *, const double *, double *, long long,
+                   long long, long long, long long, long long)
+        = __builtin_cpu_supports("avx2") ? dtw_row_avx2 : dtw_row_sse2;
+    long long lbmax = 1, p;
+    for (p = 0; p < n; p++)
+        if (lenB[ib[p]] > lbmax) lbmax = lenB[ib[p]];
+    /* row buffers hold columns -1 .. lbmax: (lbmax + 2) x LANES */
+    size_t rowsz = (size_t) (lbmax + 2) * LANES * sizeof(double);
+    size_t btsz = (size_t) lbmax * d * LANES * sizeof(double);
+    size_t asz = (size_t) d * LANES * sizeof(double);
+    double *P = NULL, *R = NULL, *Bt = NULL, *av = NULL;
+    if (posix_memalign((void **) &P, 64, rowsz)
+        || posix_memalign((void **) &R, 64, rowsz)
+        || posix_memalign((void **) &Bt, 64, btsz)
+        || posix_memalign((void **) &av, 64, asz)) {
         /* signal the wrapper to fall back to the numpy path */
         for (p = 0; p < n; p++) out[p] = -1.0;
-        free(prev);
-        free(row);
-        return;
+        goto done;
     }
-    for (p = 0; p < n; p++) {
-        const double *A = bufA + offA[p];
-        const double *B = bufB + offB[p];
-        long long la = lenA[p], lb = lenB[p], wlo, whi;
-        if (radius < 0) { wlo = la; whi = lb; }
-        else if (la > lb) { wlo = la - lb + radius; whi = radius; }
-        else { wlo = radius; whi = lb - la + radius; }
-        double cap = tau2 != NULL ? tau2[p] : INFINITY;
-        double result = INFINITY;
-        long long prev_lo = 0, prev_w = -1, i;
-        for (i = 0; i < la; i++) {
-            long long cur_lo = i - wlo;
-            if (cur_lo < 0) cur_lo = 0;
-            long long hi = i + whi;
-            if (hi > lb - 1) hi = lb - 1;
-            long long width = hi - cur_lo; /* inclusive lanes [0, width] */
-            if (width < 0) { /* fully out-of-band row: all lanes dead */
-                prev_lo = cur_lo;
-                prev_w = -1;
-                continue;
+    for (long long g0 = 0; g0 < n; g0 += LANES) {
+        const double *A[LANES];
+        long long la[LANES], lb[LANES], wlo[LANES], whi[LANES];
+        double lo[LANES] __attribute__((aligned(32)));
+        double hi[LANES] __attribute__((aligned(32)));
+        double rmin[LANES] __attribute__((aligned(32)));
+        double cap[LANES];
+        int live[LANES], l, nlive = 0;
+        long long lbg = 1, lamax = 0, i, j, dim;
+        for (l = 0; l < LANES; l++) {
+            p = g0 + l;
+            la[l] = p < n ? lenA[ia[p]] : 0;
+            lb[l] = p < n ? lenB[ib[p]] : 0;
+            /* an empty series has no warping path: +inf, like numpy */
+            if (p < n) out[p] = INFINITY;
+            live[l] = la[l] > 0 && lb[l] > 0;
+            if (!live[l]) continue;
+            nlive++;
+            A[l] = bufA + offA[ia[p]];
+            if (radius < 0) { wlo[l] = la[l]; whi[l] = lb[l]; }
+            else if (la[l] > lb[l]) { wlo[l] = la[l] - lb[l] + radius; whi[l] = radius; }
+            else { wlo[l] = radius; whi[l] = lb[l] - la[l] + radius; }
+            cap[l] = tau2 != NULL ? tau2[p] : INFINITY;
+            if (lb[l] > lbg) lbg = lb[l];
+            if (la[l] > lamax) lamax = la[l];
+        }
+        for (j = 0; j < lbg; j++)
+            for (dim = 0; dim < d; dim++) {
+                double *dst = Bt + (j * d + dim) * LANES;
+                for (l = 0; l < LANES; l++)
+                    dst[l] = live[l] && j < lb[l]
+                        ? bufB[offB[ib[g0 + l]] + j * d + dim] : 0.0;
             }
-            long long shift = cur_lo - prev_lo, k;
-            double s = 0.0;
-            if (i == 0) {
-                /* row 0: row = cumsum(Dw), like the numpy i==0 branch.
-                 * (A row after a fully-dead row — unreachable with
-                 * valid bands — falls into the i>0 branch, where every
-                 * prev read hits the inf bound and the row propagates
-                 * inf, exactly like the numpy kernel.) */
-                for (k = 0; k <= width; k++) {
-                    double dw;
-                    if (d == 1) {
-                        double t = A[i] - B[cur_lo + k];
-                        dw = t * t;
-                    } else {
-                        long long dim;
-                        dw = 0.0;
-                        for (dim = 0; dim < d; dim++) {
-                            double t = A[i * d + dim]
-                                - B[(cur_lo + k) * d + dim];
-                            dw += t * t;
-                        }
-                    }
-                    s += dw;
-                    row[k] = s;
+        /* virtual row -1: 0 at column -1, +inf elsewhere */
+        for (l = 0; l < LANES; l++) P[l] = 0.0;
+        for (j = LANES; j < (lbg + 1) * LANES; j++) P[j] = INFINITY;
+        double *prev = P, *row = R;
+        for (i = 0; i < lamax && nlive > 0; i++) {
+            long long jlo = lbg, jhi = -1, jin = 0, jout = lbg;
+            for (l = 0; l < LANES; l++) {
+                if (!live[l]) {
+                    lo[l] = INFINITY;
+                    hi[l] = -1.0;
+                    for (dim = 0; dim < d; dim++) av[dim * LANES + l] = 0.0;
+                    continue;
                 }
-            } else {
-                double m = INFINITY;
-                for (k = 0; k <= width; k++) {
-                    double dw;
-                    if (d == 1) {
-                        double t = A[i] - B[cur_lo + k];
-                        dw = t * t;
-                    } else {
-                        long long dim;
-                        dw = 0.0;
-                        for (dim = 0; dim < d; dim++) {
-                            double t = A[i * d + dim]
-                                - B[(cur_lo + k) * d + dim];
-                            dw += t * t;
-                        }
-                    }
-                    /* up = prev lane k+shift, diag = prev lane
-                     * k+shift-1; out-of-range prev lanes are the inf
-                     * pad of the numpy P/Q construction */
-                    long long ju = k + shift, jd = ju - 1;
-                    double up = (ju >= 0 && ju <= prev_w) ? prev[ju]
-                                                          : INFINITY;
-                    double dg = (jd >= 0 && jd <= prev_w) ? prev[jd]
-                                                          : INFINITY;
-                    double mn = up < dg ? up : dg;
-                    double a = dw + mn;
-                    s += dw;
-                    double t = a - s;
-                    if (t < m) m = t;
-                    row[k] = s + m;
+                long long cl = i - wlo[l] > 0 ? i - wlo[l] : 0;
+                long long ch = i + whi[l] < lb[l] - 1 ? i + whi[l] : lb[l] - 1;
+                lo[l] = (double) cl;
+                hi[l] = (double) ch;
+                if (cl < jlo) jlo = cl;
+                if (ch > jhi) jhi = ch;
+                if (cl > jin) jin = cl;
+                if (ch < jout) jout = ch;
+                for (dim = 0; dim < d; dim++)
+                    av[dim * LANES + l] = A[l][i * d + dim];
+            }
+            row_fn(Bt, prev, row, av, lo, hi, rmin, jlo, jhi, jin, jout, d);
+            /* the next row reads columns jlo-1 .. jhi+1 of this one */
+            for (l = 0; l < LANES; l++) {
+                row[jlo * LANES + l] = INFINITY;
+                row[(jhi + 2) * LANES + l] = INFINITY;
+            }
+            for (l = 0; l < LANES; l++) {
+                if (!live[l]) continue;
+                if (i + 1 == la[l]) {
+                    out[g0 + l] = sqrt(row[lb[l] * LANES + l]);
+                    live[l] = 0;
+                    nlive--;
+                } else if (rmin[l] > cap[l]) {
+                    out[g0 + l] = INFINITY;
+                    live[l] = 0;
+                    nlive--;
                 }
-            }
-            if (i + 1 == la) {
-                result = row[lb - 1 - cur_lo];
-                break;
-            }
-            if (tau2 != NULL) {
-                double rmin = INFINITY;
-                for (k = 0; k <= width; k++)
-                    if (row[k] < rmin) rmin = row[k];
-                if (rmin > cap) { result = INFINITY; break; }
             }
             double *tmp = prev;
             prev = row;
             row = tmp;
-            prev_lo = cur_lo;
-            prev_w = width;
         }
-        out[p] = sqrt(result);
     }
-    free(prev);
-    free(row);
+done:
+    free(av);
+    free(P);
+    free(R);
+    free(Bt);
 }

@@ -2,17 +2,27 @@
 Arrow boundary).
 
 Compiles ``_dtw_kernel.c`` with the system C compiler into a per-machine
-cache (`$TMPDIR/tslearn_spark_ck/dtw_<srchash>.so`) the first time it is
-needed and loads it via ctypes.  Spark local-mode python workers share
-the cache with the driver (the driver's import builds it before workers
-spawn); at cluster scale each executor machine builds its own copy once.
+cache (`$TMPDIR/tslearn_spark_ck/dtw_<hash>.so`, the hash covering the
+source, the compile flags and the compiler's version line) the first
+time it is needed and loads it via ctypes.  Spark local-mode python
+workers share the cache with the driver (the driver's import builds it
+before workers spawn); at cluster scale each executor machine builds its
+own copy once.
+
+The kernel has one entry point, ``dtw_index``: DTW of index-addressed
+pairs over two flattened series sets (``SeriesSet``), evaluated 12 pairs
+at a time in a lane-interleaved layout (see the .c header).  The kNN
+broadcast path flattens its train set once and passes pair indices;
+``dtw_batch`` keeps the per-pair list API for the other callers by
+flattening each list once and passing the identity pairs sorted by
+(la - lb, la), so lanes of one group share their band shape.
 
 Everything is best-effort: no compiler, a failed compile, or
-``TSLEARN_SPARK_CKERNEL=0`` silently leaves ``lib_or_none()`` returning
-None and the numpy kernels run unchanged.  The compiled DP is
-bit-identical to the numpy kernel on non-abandoned pairs (see the .c
-header; pinned by tests/test_ckernel.py), so which path executed is
-unobservable in results.
+``TSLEARN_SPARK_CKERNEL=0`` leaves ``lib_or_none()`` returning None and
+the numpy kernels run unchanged (``kernels._dtw_c_or_none`` logs a
+warning when a loaded kernel raises).  The compiled DP is bit-identical
+to the numpy kernel on non-abandoned pairs (see the .c header; pinned by
+tests/test_ckernel.py), so which path executed does not change results.
 """
 
 from __future__ import annotations
@@ -23,6 +33,7 @@ import os
 import subprocess
 import tempfile
 import threading
+from typing import NamedTuple
 
 import numpy as np
 
@@ -31,7 +42,7 @@ _CC = os.environ.get("TSLEARN_SPARK_CC", "gcc")
 # -ffp-contract=off: FMA contraction would re-round (a-b)*(a-b)+acc and
 # break bit-identity with the numpy kernel; everything else is plain
 # IEEE double arithmetic on both sides.
-_CFLAGS = ["-O2", "-ffp-contract=off", "-shared", "-fPIC"]
+_CFLAGS = ["-O3", "-ffp-contract=off", "-shared", "-fPIC"]
 
 _lock = threading.Lock()
 _lib = None
@@ -41,12 +52,45 @@ _I64P = np.ctypeslib.ndpointer(np.int64, flags="C_CONTIGUOUS")
 _F64P = np.ctypeslib.ndpointer(np.float64, flags="C_CONTIGUOUS")
 
 
+class SeriesSet(NamedTuple):
+    """Series stored back to back: series ``q`` is
+    ``buf[off[q] : off[q] + lens[q] * d]`` viewed as ``(lens[q], d)``."""
+
+    buf: np.ndarray   # float64
+    off: np.ndarray   # int64
+    lens: np.ndarray  # int64
+    d: int
+
+    def series(self, q: int) -> np.ndarray:
+        o = int(self.off[q])
+        return self.buf[o : o + int(self.lens[q]) * self.d].reshape(-1, self.d)
+
+
+def flatten(arrs: list) -> SeriesSet:
+    """Copy a list of (len,) or (len, d) arrays into one ``SeriesSet``."""
+    n = len(arrs)
+    d = arrs[0].shape[1] if n and arrs[0].ndim > 1 else 1
+    lens = np.fromiter((a.shape[0] for a in arrs), dtype=np.int64, count=n)
+    off = np.zeros(n, dtype=np.int64)
+    np.cumsum(lens[:-1] * d, out=off[1:])
+    buf = np.concatenate(
+        [np.ascontiguousarray(a, dtype=np.float64).reshape(-1) for a in arrs]
+    ) if n else np.empty(0)
+    return SeriesSet(buf, off, lens, d)
+
+
 def _so_path() -> str:
+    h = hashlib.sha256()
     with open(_SRC, "rb") as f:
-        h = hashlib.sha256(f.read()).hexdigest()[:16]
+        h.update(f.read())
+    # a flag or compiler change must not load a build made without it
+    h.update(" ".join(_CFLAGS).encode())
+    ver = subprocess.run([_CC, "--version"], check=True, capture_output=True,
+                         text=True, timeout=60).stdout
+    h.update(ver.splitlines()[0].encode() if ver else b"")
     cache = os.environ.get("TSLEARN_SPARK_CK_DIR") or os.path.join(
         tempfile.gettempdir(), "tslearn_spark_ck")
-    return os.path.join(cache, f"dtw_{h}.so")
+    return os.path.join(cache, f"dtw_{h.hexdigest()[:16]}.so")
 
 
 def lib_or_none():
@@ -72,10 +116,11 @@ def lib_or_none():
                         check=True, capture_output=True, timeout=120)
                     os.replace(tmp, so)
                 cand = ctypes.CDLL(so)
-                cand.dtw_batch.restype = None
-                cand.dtw_batch.argtypes = [
+                cand.dtw_index.restype = None
+                cand.dtw_index.argtypes = [
                     _F64P, _I64P, _I64P,        # bufA, offA, lenA
                     _F64P, _I64P, _I64P,        # bufB, offB, lenB
+                    _I64P, _I64P,               # ia, ib
                     ctypes.c_longlong,          # n
                     ctypes.c_longlong,          # d
                     ctypes.c_longlong,          # radius (<0: none)
@@ -90,37 +135,65 @@ def lib_or_none():
         return _lib
 
 
-def _flatten(arrs: list, d: int):
-    n = len(arrs)
-    lens = np.fromiter((a.shape[0] for a in arrs), dtype=np.int64, count=n)
-    offs = np.zeros(n, dtype=np.int64)
-    np.cumsum(lens[:-1] * d, out=offs[1:])
-    buf = np.concatenate(
-        [np.ascontiguousarray(a, dtype=np.float64).reshape(-1) for a in arrs]
-    ) if n else np.empty(0)
-    return buf, offs, lens
+def _checked(s: SeriesSet, idx, name: str) -> np.ndarray:
+    """``idx`` as contiguous int64, after checking that it and every
+    series it names lie inside ``s`` (the C side trusts both)."""
+    idx = np.ascontiguousarray(idx, dtype=np.int64)
+    if idx.size and (idx.min() < 0 or idx.max() >= len(s.lens)):
+        raise IndexError(f"{name} out of range for a set of {len(s.lens)} series")
+    if len(s.lens) and ((s.off < 0).any()
+                        or (s.off + s.lens * s.d).max() > s.buf.size):
+        raise ValueError(f"{name}: series offsets run past the buffer")
+    return idx
 
 
-def dtw_batch(arrs_a: list, arrs_b: list, radius, tau2=None) -> np.ndarray:
-    """Run the compiled DP over a mixed-shape pair batch.
+def dtw_index(sa: SeriesSet, sb: SeriesSet, ia, ib, radius,
+              tau2=None) -> np.ndarray:
+    """DTW of the pairs (``sa`` series ``ia[p]``, ``sb`` series ``ib[p]``).
 
     Caller guarantees lib_or_none() is not None.  Returns the same
     doubles as the numpy kernels (bitwise, modulo the documented tau2
-    inf-vs-above-cap freedom).
+    inf-vs-above-cap freedom).  Runs fastest when neighbouring pairs
+    have alike (la, lb), e.g. one query against a length-sorted set.
     """
     lib = lib_or_none()
-    n = len(arrs_a)
-    d = arrs_a[0].shape[1] if arrs_a[0].ndim > 1 else 1
-    buf_a, off_a, len_a = _flatten(arrs_a, d)
-    buf_b, off_b, len_b = _flatten(arrs_b, d)
+    if sa.d != sb.d:
+        raise ValueError(f"dimension mismatch: {sa.d} vs {sb.d}")
+    ia = _checked(sa, ia, "ia")
+    ib = _checked(sb, ib, "ib")
+    n = len(ia)
+    if len(ib) != n:
+        raise ValueError(f"{n} ia entries vs {len(ib)} ib entries")
     out = np.empty(n, dtype=np.float64)
     if tau2 is None:
         tau_p = None
     else:
         tau_arr = np.ascontiguousarray(tau2, dtype=np.float64)
+        if tau_arr.shape != (n,):
+            raise ValueError(f"tau2 has shape {tau_arr.shape}, want ({n},)")
         tau_p = tau_arr.ctypes.data_as(ctypes.c_void_p)
-    lib.dtw_batch(buf_a, off_a, len_a, buf_b, off_b, len_b,
-                  n, d, -1 if radius is None else int(radius), tau_p, out)
+    buf_a = np.ascontiguousarray(sa.buf, dtype=np.float64)
+    buf_b = np.ascontiguousarray(sb.buf, dtype=np.float64)
+    lib.dtw_index(buf_a, np.ascontiguousarray(sa.off, dtype=np.int64),
+                  np.ascontiguousarray(sa.lens, dtype=np.int64),
+                  buf_b, np.ascontiguousarray(sb.off, dtype=np.int64),
+                  np.ascontiguousarray(sb.lens, dtype=np.int64),
+                  ia, ib, n, sa.d, -1 if radius is None else int(radius),
+                  tau_p, out)
     if n and out[0] == -1.0 and np.all(out == -1.0):
-        raise MemoryError("dtw_batch scratch allocation failed")
+        raise MemoryError("dtw_index scratch allocation failed")
+    return out
+
+
+def dtw_batch(arrs_a: list, arrs_b: list, radius, tau2=None) -> np.ndarray:
+    """``dtw_index`` over a per-pair list batch (pair p = arrs_a[p],
+    arrs_b[p]): each list is flattened once and the pairs are passed
+    sorted by (la - lb, la)."""
+    if not arrs_a:
+        return np.empty(0)
+    sa, sb = flatten(arrs_a), flatten(arrs_b)
+    order = np.lexsort((sa.lens, sa.lens - sb.lens))
+    out = np.empty(len(order))
+    out[order] = dtw_index(sa, sb, order, order, radius,
+                           None if tau2 is None else np.asarray(tau2)[order])
     return out

@@ -28,11 +28,18 @@ normalization) match the reference where cited.
 
 from __future__ import annotations
 
+import logging
+import threading
 import warnings
 
 import numpy as np
 
 GLOBAL_CONSTRAINT_CODE = {None: 0, "": 0, "itakura": 1, "sakoe_chiba": 2}
+
+_log = logging.getLogger(__name__)
+# the C-kernel fallback warning fires once per process (_dtw_c_or_none)
+_c_fallback_warned = False
+_c_fallback_lock = threading.Lock()
 
 
 # ---------------------------------------------------------------------------
@@ -245,50 +252,6 @@ def dtw(s1, s2, global_constraint=None, sakoe_chiba_radius=None,
     return float(np.sqrt(C[-1, -1]))
 
 
-def dtw_banded_batch(A: np.ndarray, B: np.ndarray, radius: int | None = None) -> np.ndarray:
-    """Banded DTW for a BATCH of same-shape pairs — the executor hot path.
-
-    A: (n, sz1, d), B: (n, sz2, d).  Works in band coordinates: per DP row
-    only the [lo_i, hi_i] window is stored, and every numpy op runs on a
-    (n_pairs, band_width) array — the Python-level loop is over sz1 rows
-    only, amortizing interpreter overhead across the whole batch (~100x
-    over per-pair kernels at batch sizes in the thousands).
-    radius=None -> unconstrained (full-width band).
-    """
-    n, sz1, d = A.shape
-    sz2 = B.shape[1]
-    if radius is None:
-        radius = max(sz1, sz2)
-    lo, hi = sakoe_chiba_bounds(sz1, sz2, int(radius))
-    W = int((hi - lo + 1).max())
-    w0 = int(hi[0] - lo[0] + 1)
-    D0 = ((A[:, 0:1, :] - B[:, lo[0]:hi[0] + 1, :]) ** 2).sum(-1)
-    prev = np.full((n, W), np.inf)
-    prev[:, :w0] = np.cumsum(D0, axis=1)
-    prev_lo = int(lo[0])
-    for i in range(1, sz1):
-        li, hi_i = int(lo[i]), int(hi[i])
-        w = hi_i - li + 1
-        D = ((A[:, i:i + 1, :] - B[:, li:hi_i + 1, :]) ** 2).sum(-1)
-        shift = li - prev_lo
-        idx_up = np.arange(w) + shift
-        up = np.full((n, w), np.inf)
-        mask = idx_up < W
-        up[:, mask] = prev[:, idx_up[mask]]
-        idx_dg = idx_up - 1
-        diag = np.full((n, w), np.inf)
-        mask2 = (idx_dg >= 0) & (idx_dg < W)
-        diag[:, mask2] = prev[:, idx_dg[mask2]]
-        a = D + np.minimum(up, diag)
-        s = np.cumsum(D, axis=1)
-        row = s + np.minimum.accumulate(a - s, axis=1)
-        prev = np.full((n, W), np.inf)
-        prev[:, :w] = row
-        prev_lo = li
-    k_last = sz2 - 1 - int(lo[sz1 - 1])
-    return np.sqrt(prev[:, k_last])
-
-
 # unconstrained row-scan DP works on (n, L2) rows (not the (n, L^2) grid of
 # the anti-diagonal kernels), so the sweet spot is larger than _GRID_SUBBATCH:
 # ~512 pairs keeps the ~6 live (n, L2) row buffers L2-cache-resident
@@ -339,29 +302,56 @@ def _dtw_full_core(A: np.ndarray, B: np.ndarray, la: np.ndarray, lb: np.ndarray)
     return np.sqrt(res)
 
 
-def _dtw_c_or_none(arrs_a: list, arrs_b: list, radius, tau2=None):
-    """Compiled-DP dispatch (guide §4.2): run the batch through the C
-    kernel when it is available, else return None so the caller falls
-    through to the numpy path.  Values are bit-identical to the numpy
-    kernels (tslearn_spark.ckernel docstring; pinned by
-    tests/test_ckernel.py), so the dispatch is unobservable in results —
-    it only removes the per-row numpy dispatch overhead (~60us/pair ->
-    ~5us/pair on events-length series, measured)."""
+def _dtw_c_or_none(kernel, *args):
+    """Compiled-DP dispatch (guide §4.2): ``kernel(*args)`` (a
+    ``tslearn_spark.ckernel`` entry) when the C kernel is loaded, else
+    None so the caller falls through to the numpy path.  Values are
+    bit-identical to the numpy kernels (tslearn_spark.ckernel docstring;
+    pinned by tests/test_ckernel.py); the C path only removes the per-row
+    numpy dispatch overhead (~120us/pair numpy vs ~4us/pair C on 4,000
+    random pairs of 64-128-length series at radius 5, one thread of a
+    4-vCPU AVX2 VM).  A kernel that raises falls back too, with one
+    WARNING per process, because the numpy path is that much slower."""
+    global _c_fallback_warned
     from tslearn_spark import ckernel
 
-    if not arrs_a or ckernel.lib_or_none() is None:
+    if ckernel.lib_or_none() is None:
         return None
     try:
-        return ckernel.dtw_batch(arrs_a, arrs_b, radius, tau2)
-    except Exception:
+        return kernel(*args)
+    except Exception as exc:
+        with _c_fallback_lock:
+            first, _c_fallback_warned = not _c_fallback_warned, True
+        if first:
+            _log.warning("compiled DTW kernel raised %s (%s); running the "
+                         "numpy kernel instead", type(exc).__name__, exc,
+                         exc_info=exc)
         return None
+
+
+def dtw_index_batch(sa, sb, ia, ib, radius: int | None = None,
+                    tau2: np.ndarray | None = None) -> np.ndarray:
+    """DTW of index-addressed pairs: pair p is (``sa`` series ``ia[p]``,
+    ``sb`` series ``ib[p]``) over two ``ckernel.SeriesSet``s, with the
+    radius/tau2 semantics of ``dtw_banded_batch_mixed``.  The C kernel
+    reads both sets in place; without it the pairs become per-pair views
+    for the numpy batcher."""
+    from tslearn_spark import ckernel
+
+    c = _dtw_c_or_none(ckernel.dtw_index, sa, sb, ia, ib, radius, tau2)
+    if c is not None:
+        return c
+    return dtw_banded_batch_mixed([sa.series(i) for i in ia],
+                                  [sb.series(j) for j in ib], radius, tau2)
 
 
 def dtw_full_batch_mixed(arrs_a: list, arrs_b: list) -> np.ndarray:
     """Unconstrained DTW for a mixed-shape batch: size-sorted cache-sized
     chunks through the gather-free row scan (the radius=None fast path of
     ``dtw_banded_batch_mixed``)."""
-    c = _dtw_c_or_none(arrs_a, arrs_b, None)
+    from tslearn_spark import ckernel
+
+    c = _dtw_c_or_none(ckernel.dtw_batch, arrs_a, arrs_b, None)
     if c is not None:
         return c
     n = len(arrs_a)
@@ -384,10 +374,9 @@ def dtw_banded_batch_mixed(arrs_a: list, arrs_b: list, radius: int | None = None
                            tau2: np.ndarray | None = None) -> np.ndarray:
     """Banded DTW for a batch of MIXED-shape pairs — padded, masked DP.
 
-    ``dtw_banded_batch`` needs same-shape stacks, so with variable-length
-    series the per-(shape,shape) buckets degenerate to a handful of pairs
-    and the batch effect dies (measured ~500us/pair vs ~30us here at
-    sz 45-99).  This kernel pads every pair to (Lmax1, Lmax2), runs ONE
+    With variable-length series, same-shape buckets degenerate to a
+    handful of pairs and the batch effect dies (measured ~500us/pair vs
+    ~30us here at sz 45-99).  This kernel pads every pair to (Lmax1, Lmax2), runs ONE
     row-scan DP over the whole batch, masks cells outside each pair's
     Sakoe-Chiba band (sakoe_chiba_bounds semantics, dtw_variants.py:906-956)
     to +inf, and gathers each pair's result at its own (la-1, lb-1) cell.
@@ -413,7 +402,9 @@ def dtw_banded_batch_mixed(arrs_a: list, arrs_b: list, radius: int | None = None
     """
     if radius is None:
         return dtw_full_batch_mixed(arrs_a, arrs_b)
-    c = _dtw_c_or_none(arrs_a, arrs_b, radius, tau2)
+    from tslearn_spark import ckernel
+
+    c = _dtw_c_or_none(ckernel.dtw_batch, arrs_a, arrs_b, radius, tau2)
     if c is not None:
         return c
     n = len(arrs_a)

@@ -209,27 +209,38 @@ def _dtw_topk_broadcast(queries: DataFrame, train: DataFrame, k: int,
 
     The pair-join plan ships every train series once PER QUERY through
     Arrow (n_q x n_t nested rows — the dominant stage cost, not the
-    kernel).  Here the train set is broadcast once per executor, each
-    query partition runs the mixed-shape batched DP against ALL train
-    series in numpy, and only the per-partition top-k candidate rows
+    kernel).  Here the train set is flattened once on the driver (one
+    length-sorted ``ckernel.SeriesSet``) and broadcast once per executor,
+    each query partition runs the batched DP against ALL train series by
+    pair index, and only the per-partition top-k candidate rows
     (id1, id2, dist) are emitted — Arrow traffic drops from O(n_q*n_t)
     series payloads to O(n_q) + O(n_q*k) scalars, the same shape as the
     euclidean BLAS path.  Exact: every pair is still evaluated.
     """
     from tslearn_spark import kernels as K
+    from tslearn_spark.ckernel import flatten
 
     # Arrow transfer (toPandas), not collect(): Row objects wrap nested
     # lists in per-element Python objects — ~5-10x the heap of the raw
     # doubles, which matters near _DTW_BROADCAST_LIMIT_VALUES
     t_pdf = train.select("series_id", "values").toPandas()
-    t_ids = t_pdf["series_id"].to_numpy(dtype=np.int64)
     t_arrs = [
         np.asarray([np.asarray(x, dtype=np.float64) for x in v])
         for v in t_pdf["values"]
     ]
-    spark = queries.sparkSession
-    bc = spark.sparkContext.broadcast((t_ids, t_arrs))
     n_t = len(t_arrs)
+    lens_t_drv = np.fromiter((t.shape[0] for t in t_arrs), dtype=np.int64,
+                             count=n_t)
+    # one flat, length-sorted train set: each task pairs a query with
+    # every train series by index (no per-pair copies), and consecutive
+    # pairs of one query have alike lengths, which the kernel's lane
+    # groups need (ckernel.dtw_index)
+    by_len = np.argsort(lens_t_drv, kind="stable")
+    t_ids = t_pdf["series_id"].to_numpy(dtype=np.int64)[by_len]
+    t_set = flatten([t_arrs[j] for j in by_len])
+    del t_arrs
+    spark = queries.sparkSession
+    bc = spark.sparkContext.broadcast((t_ids, t_set))
     chunk_q = max(1, 65536 // max(n_t, 1))  # ~64k pairs per kernel call
 
     # seed-and-cap pays only where the DP lanes are expensive: the per-row
@@ -238,8 +249,6 @@ def _dtw_topk_broadcast(queries: DataFrame, train: DataFrame, k: int,
     # Measured on local[32]: events-like sz~67 W~16 -> capped is a net LOSS
     # despite 44% abandonment; sz=128 W=11 -> breakeven; sz=512 W~101 ->
     # 1.9x win at 87% abandonment.  Threshold below separates those regimes.
-    lens_t_drv = np.fromiter((t.shape[0] for t in t_arrs), dtype=np.int64,
-                             count=n_t)
     med_t = float(np.median(lens_t_drv)) if n_t else 0.0
     # the actual band width of an (la, lb) pair is |la - lb| + 2r + 1, so
     # on mixed-length corpora a bare 2r+1 estimate undercounts and the
@@ -259,29 +268,29 @@ def _dtw_topk_broadcast(queries: DataFrame, train: DataFrame, k: int,
 
     def gen(batches):
         ids_t, T = bc.value
-        lens_t = np.fromiter((t.shape[0] for t in T), dtype=np.int64, count=n_t)
+        lens_t = T.lens
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             qids = pdf["series_id"].to_numpy(dtype=np.int64)
-            q_arrs = [
+            Q = flatten([
                 np.asarray([np.asarray(x, dtype=np.float64) for x in v])
                 for v in pdf["values"]
-            ]
+            ])
             out_q, out_n, out_d = [], [], []
             kk = min(k, n_t)
             # seed count: enough to fill the top-k plus slack for a tight cap
             s_seed = min(n_t, max(kk, 8))
-            for s in range(0, len(q_arrs), chunk_q):
-                qs = q_arrs[s : s + chunk_q]
+            for s in range(0, len(qids), chunk_q):
                 qi = qids[s : s + chunk_q]
-                n_q = len(qs)
+                n_q = len(qi)
+                q_of = np.arange(s, s + n_q)
                 rr = np.arange(n_q)[:, None]
                 if not use_prune:
-                    # plain exact pass: one batched DP over every pair
-                    arrs_a = [q for q in qs for _ in range(n_t)]
-                    arrs_b = T * n_q
-                    flat = K.dtw_banded_batch_mixed(arrs_a, arrs_b, radius)
+                    # plain exact pass: every (query, train) pair, query-major
+                    flat = K.dtw_index_batch(
+                        Q, T, np.repeat(q_of, n_t),
+                        np.tile(np.arange(n_t), n_q), radius)
                     dists = flat.reshape(n_q, n_t)
                     if drop_self:
                         dists[qi[:, None] == ids_t[None, :]] = np.inf
@@ -294,15 +303,13 @@ def _dtw_topk_broadcast(queries: DataFrame, train: DataFrame, k: int,
                     # pass 1 (seeds): per query the s_seed closest-LENGTH
                     # train series — cheapest bands AND likely-near under
                     # banded DTW, so their k-th best is a tight exact cap
-                    q_lens = np.fromiter((q.shape[0] for q in qs),
-                                         dtype=np.int64, count=n_q)
+                    q_lens = Q.lens[q_of]
                     seed_idx = np.argpartition(
                         np.abs(lens_t[None, :] - q_lens[:, None]),
                         s_seed - 1, axis=1)[:, :s_seed]
-                    arrs_a = [qs[r] for r in range(n_q) for _ in range(s_seed)]
-                    arrs_b = [T[j] for r in range(n_q) for j in seed_idx[r]]
-                    d_seed = K.dtw_banded_batch_mixed(arrs_a, arrs_b, radius)
-                    d_seed = d_seed.reshape(n_q, s_seed)
+                    d_seed = K.dtw_index_batch(
+                        Q, T, np.repeat(q_of, s_seed), seed_idx.ravel(),
+                        radius).reshape(n_q, s_seed)
                     if drop_self:
                         d_seed[qi[:, None] == ids_t[seed_idx]] = np.inf
                     sel_s = np.stack([
@@ -319,11 +326,10 @@ def _dtw_topk_broadcast(queries: DataFrame, train: DataFrame, k: int,
                     rest_counts = n_t - s_seed
                     if rest_counts > 0:
                         r_of, j_of = np.nonzero(~is_seed)  # row-major pairs
-                        arrs_a = [qs[r] for r in r_of]
-                        arrs_b = [T[j] for j in j_of]
                         tau = best_d.max(axis=1)      # k-th best per query
-                        flat = K.dtw_banded_batch_mixed(
-                            arrs_a, arrs_b, radius, tau2=(tau * tau)[r_of])
+                        flat = K.dtw_index_batch(
+                            Q, T, q_of[r_of], j_of, radius,
+                            tau2=(tau * tau)[r_of])
                         d_rest = flat.reshape(n_q, rest_counts)
                         j_rest = j_of.reshape(n_q, rest_counts)
                         if drop_self:

@@ -1081,10 +1081,10 @@ def cdist_dtw_tiny(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact DTW under the hash gate (dtw_variants.py:24-57,384-465).
 
     Runs the REAL distributed path end-to-end — self_pairs triangle ->
-    mixed-shape batched DP (kernels.py:171,292) -> mirror + zero diagonal
-    via cdist — on tiny integer series where every DP cell is an exact
-    integer: values are floor()-quantized doubles, costs are squared int
-    diffs, and min/+ are exact below 2^53, so both engines produce
+    mixed-shape batched DP (kernels.dtw_banded_batch_mixed) -> mirror +
+    zero diagonal via cdist — on tiny integer series where every DP cell
+    is an exact integer: values are floor()-quantized doubles, costs are
+    squared int diffs, and min/+ are exact below 2^53, so both engines produce
     bit-identical doubles and sqrt is IEEE correctly-rounded on both.
     Series lengths vary 5..8 by user (rn <= 5 + user_id % 4) so the
     padded mixed-shape kernel path is the one exercised, not a
@@ -1100,8 +1100,8 @@ def cdist_dtw_tiny(spark: SparkSession, sf_dir: str) -> DataFrame:
     unlike the distance diagonal's 0.0.
 
     The dtw_band column gates the BANDED batched DP — the
-    performance-critical masked kernel (kernels.py:178-219 band-
-    coordinate row-scan; mask semantics dtw_variants.py:906-956) — with
+    performance-critical masked kernel (kernels.dtw_banded_batch_mixed;
+    mask semantics dtw_variants.py:906-956) — with
     sakoe_chiba_radius=2 over the same mixed-length pairs: the oracle
     replays the per-row [lo, hi] band bounds (diagonal-adjusted for
     unequal lengths) and carries +infinity for out-of-band cells, which
@@ -1256,8 +1256,7 @@ def knn_dtw_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded batch DP (kernels.dtw_index_batch), tie-aware top-k,
     majority vote — on floor()-quantized integer series (lengths 12..16
     by user, sakoe_chiba_radius=5, labels user_id % 3).  On integer
-    values every DP cell is an exact integer (the row-scan cumsum trick
-    is exact under integer associativity), the +inf band border
+    values every DP cell is an exact integer, the +inf band border
     propagates identically, and sqrt is correctly rounded on both
     engines — so the DuckDB banded-DP recursive CTE (the
     cdist_dtw_tiny:dtw_band machinery at radius 5) + argmin(dist, id2)
@@ -1341,16 +1340,17 @@ def dba_barycenter_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     over 10 floor()-quantized 32-length series.
 
     Runs the REAL distributed path — broadcast center, per-series
-    dtw_path E-step (kernels.py:203 row-scan matrix + :522 diag-first
+    dtw_path E-step (kernels.dtw_accumulated_matrix + diag-first
     backtrack), exploded grouped M-step — on integer series where every
     quantity both engines compute is bit-identical: series values stay
     integers through ALL iterations (the M-step sums SERIES values, so
     wsum/wtot are exact integers in any summation order and each center
     value is one correctly-rounded division), iteration-1 DP cells are
-    exact integers, and iteration>=2 cells replay the engine's exact
-    row-scan float association (cell = s + min-prefix(a - s) with
-    left-fold scalars — see the oracle CTE).  The tol=1e-5 early-break
-    is replayed with a frozen-center flag per unrolled stage.  This
+    exact integers, and iteration>=2 cells replay the reference
+    recurrence (cell = cost + min(up, diag, left), one add per cell,
+    which the engine computes bit for bit — see the oracle CTE).  The
+    tol=1e-5 early-break is replayed with a frozen-center flag per
+    unrolled stage.  This
     lifts the strongest iterative query from rows-only to hash-gated."""
     from tslearn_spark.barycenters import dtw_barycenter_averaging
 
@@ -1858,13 +1858,14 @@ _ES_STOP = "['el','la','los','las','es','en','un','una','por','para']"
 def _dba_stage_sql(k: int, sz: int, tol: float) -> str:
     """One unrolled DBA E-M stage (center_{k-1} -> center_{k}).
 
-    Forward DP replays the engine's ROW-SCAN float association exactly
-    (kernels.py:203-238): row 1 is a pure left-fold cumsum; rows >= 2
-    compute cell = s + m with left-fold scalars s (cumsum of costs) and
-    m (min-prefix of a - s), a = cost + min(up, diag).  One cell per
-    recursion step; every dp row IS one cell, so the full matrix comes
-    back as list(cur[j] ORDER BY i, j).  Backtrack replays numpy's
-    first-on-tie argmin over (diag, up, left) (kernels.py:522-541).
+    Forward DP is the reference recurrence (dtw_variants.py:24-57),
+    cell = cost + least(up, diag, left), one add per cell — the form the
+    cdist/knn oracles use; min is exact, so it gives the engine's bits
+    (kernels._dtw_forward) whatever the traversal order.  Row 1 and
+    column 1 have one neighbour each.  One cell per recursion step;
+    every dp row IS one cell, so the full matrix comes back as
+    list(cur[j] ORDER BY i, j).  Backtrack replays numpy's first-on-tie
+    argmin over (diag, up, left) (kernels._return_path).
     The M-step sums SERIES values (integers -> order-free exact sums);
     tol freezing carries a stopped flag so an early delta < tol stage
     passes the center through unchanged, like the engine's break."""
@@ -1876,38 +1877,25 @@ def _dba_stage_sql(k: int, sz: int, tol: float) -> str:
     dp_{c} AS (
         SELECT s.sid, s.vals, cc.cv, 1 AS i, 1 AS j,
                CAST([] AS DOUBLE[]) AS prev,
-               [(cc.cv[1] - s.vals[1]) * (cc.cv[1] - s.vals[1])] AS cur,
-               CAST(0.0 AS DOUBLE) AS sacc, CAST(0.0 AS DOUBLE) AS macc
+               [(cc.cv[1] - s.vals[1]) * (cc.cv[1] - s.vals[1])] AS cur
         FROM ser s, cl_{c} cc
         UNION ALL
         SELECT sid, vals, cv, ni, nj,
                CASE WHEN nj = 1 THEN cur ELSE prev END,
-               CASE WHEN ni = 1 THEN list_append(cur, cur[j] + d)
-                    WHEN nj = 1 THEN [d + ((d + cur[1]) - d)]
-                    ELSE list_append(cur, ns + nm)
-               END,
-               CASE WHEN ni = 1 THEN 0.0 WHEN nj = 1 THEN d ELSE ns END,
-               CASE WHEN ni = 1 THEN 0.0
-                    WHEN nj = 1 THEN (d + cur[1]) - d
-                    ELSE nm END
+               CASE WHEN nj = 1 THEN [d + cur[1]]
+                    WHEN ni = 1 THEN list_append(cur, d + cur[j])
+                    ELSE list_append(cur,
+                                     d + least(prev[nj], prev[j], cur[j]))
+               END
         FROM (
             SELECT *,
-                   CASE WHEN nj = 1 OR ni = 1 THEN 0.0
-                        ELSE sacc + d END AS ns,
-                   CASE WHEN nj = 1 OR ni = 1 THEN 0.0
-                        ELSE least(macc,
-                                   (d + least(prev[nj], prev[nj - 1]))
-                                   - (sacc + d)) END AS nm
+                   (cv[ni] - vals[nj]) * (cv[ni] - vals[nj]) AS d
             FROM (
-                SELECT *,
-                       (cv[ni] - vals[nj]) * (cv[ni] - vals[nj]) AS d
-                FROM (
-                    SELECT sid, vals, cv, i, j, prev, cur, sacc, macc,
-                           CASE WHEN j < {sz} THEN i ELSE i + 1 END AS ni,
-                           CASE WHEN j < {sz} THEN j + 1 ELSE 1 END AS nj
-                    FROM dp_{c}
-                    WHERE NOT (i = {sz} AND j = {sz})
-                )
+                SELECT sid, vals, cv, i, j, prev, cur,
+                       CASE WHEN j < {sz} THEN i ELSE i + 1 END AS ni,
+                       CASE WHEN j < {sz} THEN j + 1 ELSE 1 END AS nj
+                FROM dp_{c}
+                WHERE NOT (i = {sz} AND j = {sz})
             )
         )
     ),

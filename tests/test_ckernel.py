@@ -1,8 +1,8 @@
-"""r15: the compiled DTW kernel (tslearn_spark/_dtw_kernel.c via
-tslearn_spark.ckernel) must be bit-identical to the numpy batchers on
-every non-abandoned pair, and downstream-equivalent on tau2 paths —
-the dispatch in kernels.dtw_banded_batch_mixed / dtw_full_batch_mixed
-is unobservable in results."""
+"""The compiled DTW kernel (tslearn_spark/_dtw_kernel.c via
+tslearn_spark.ckernel) must be bit-identical to the numpy forward pass
+on every non-abandoned pair, and downstream-equivalent on tau2 paths —
+the dispatch in kernels.dtw_banded_batch_mixed is unobservable in
+results."""
 
 import numpy as np
 import pytest
@@ -40,13 +40,10 @@ class TestCKernelBitwise:
         rs = np.random.RandomState(11)
         aa, bb = _mixed(rs, 700, d=d), _mixed(rs, 700, d=d)
         c = ck.dtw_batch(aa, bb, radius)
-        if radius is None:
-            base = _numpy_path(K.dtw_full_batch_mixed, aa, bb)
-        else:
-            base = _numpy_path(K.dtw_banded_batch_mixed, aa, bb, radius)
-        # bit-for-bit: the C DP replicates the cumsum/prefix-min float
-        # association of the numpy kernels exactly (no FMA: built with
-        # -ffp-contract=off)
+        base = _numpy_path(K.dtw_banded_batch_mixed, aa, bb, radius)
+        # bit-for-bit: both engines run the direct recurrence, one add
+        # per cell over the same squared costs, and min is exact (no
+        # FMA: built with -ffp-contract=off)
         assert (c == base).all()
 
     def test_dispatch_is_wired(self):
@@ -96,10 +93,7 @@ class TestCKernelBitwise:
         bb = [rs.randn(80), rs.randn(1), rs.randn(60), rs.randn(3)]
         for radius in (None, 2, 10):
             c = ck.dtw_batch(aa, bb, radius)
-            if radius is None:
-                base = _numpy_path(K.dtw_full_batch_mixed, aa, bb)
-            else:
-                base = _numpy_path(K.dtw_banded_batch_mixed, aa, bb, radius)
+            base = _numpy_path(K.dtw_banded_batch_mixed, aa, bb, radius)
             assert (c == base).all()
 
     def test_kill_switch_falls_back(self, monkeypatch):
@@ -116,18 +110,16 @@ class TestCKernelBitwise:
 
 
 def _numpy_index(sa, sb, ia, ib, radius, tau2=None):
-    """The numpy batchers on the per-pair views of an index-form batch."""
+    """The numpy batcher on the per-pair views of an index-form batch."""
     aa = [sa.series(i) for i in ia]
     bb = [sb.series(j) for j in ib]
-    if radius is None:
-        return _numpy_path(K.dtw_full_batch_mixed, aa, bb)
     return _numpy_path(K.dtw_banded_batch_mixed, aa, bb, radius, tau2=tau2)
 
 
 class TestIndexForm:
     """ckernel.dtw_index (pairs addressed by index into two flattened
     series sets, evaluated in 12-lane groups) against the numpy
-    batchers, bit for bit."""
+    batcher, bit for bit."""
 
     @pytest.mark.parametrize("d", [1, 3])
     @pytest.mark.parametrize("radius", [None, 0, 5])

@@ -63,15 +63,10 @@ class TestDTW:
             np.testing.assert_allclose(got, want, atol=1e-9)
 
     def test_mixed_banded_adjacent_min_bitwise(self):
-        """r15: the banded row scan replaced the (n, W) fancy-index
-        gather of the previous DP row with an adjacent-pair min over an
-        inf-padded prev + two-slice select (valid because cur_lo =
-        max(0, i - wlo) steps by 0 or 1 per row, so min(up, diag) for
-        lane k is the min of prev cells k+shift-1 and k+shift).  Pin
-        BITWISE equality with the per-pair accumulated-matrix reference
-        on univariate batches — the rewrite must not change a single
-        ulp, including on bands clipped at both series edges and on
-        batches big enough to hit the diff-sorted sub-batch splitter."""
+        """The batched path (padded stacks with per-pair +inf band
+        masks) is BITWISE equal to the per-pair accumulated matrix on
+        univariate batches, including bands clipped at both series
+        edges and batches that span several length-sorted chunks."""
         rs = np.random.RandomState(23)
         # wide length spread: band widths W from ~2r+1 up to |la-lb|+2r+1
         arrs_a = [rs.randn(rs.randint(4, 60), 1) for _ in range(700)]
@@ -804,7 +799,8 @@ class TestNormalizedCCNorms:
 
 
 class TestDtwBatchTauCap:
-    """Round-6: exact early abandon (tau2) in the batched banded DP."""
+    """Exact early abandon (tau2) in the batched banded DP: the C kernel
+    may report +inf above the cap, the numpy path returns exact values."""
 
     def test_cap_exactness_mixed_lengths(self):
         rs = np.random.RandomState(5)
@@ -847,3 +843,45 @@ class TestDtwBatchTauCap:
             tau2=(tau * tau)[r_of])
         nn = np.minimum(tau, flat.reshape(len(test), n_t - 8).min(axis=1))
         np.testing.assert_allclose(nn, base.min(axis=1))
+
+
+class TestCKernelUnavailable:
+    @pytest.mark.parametrize("cc,kill_switch", [
+        ("/bin/false", "1"), ("/bin/false", "0"), ("noisy", "1")])
+    def test_failed_compile_is_logged(self, monkeypatch, tmp_path, caplog,
+                                      cc, kill_switch):
+        """A compiler that fails leaves lib_or_none() None with one
+        tslearn_spark.ckernel WARNING naming the exception and quoting
+        the compiler's stderr; the kill switch stays silent; the numpy
+        kernels answer either way."""
+        import logging
+
+        import tslearn_spark.ckernel as ck
+
+        if cc == "noisy":
+            cc = tmp_path / "cc"
+            cc.write_text("#!/bin/sh\necho 'cc: fatal: no such flag' >&2\nexit 1\n")
+            cc.chmod(0o755)
+        monkeypatch.setattr(ck, "_CC", str(cc))
+        monkeypatch.setenv("TSLEARN_SPARK_CK_DIR", str(tmp_path))
+        monkeypatch.setenv("TSLEARN_SPARK_CKERNEL", kill_switch)
+        monkeypatch.setattr(ck, "_lib", None)
+        monkeypatch.setattr(ck, "_tried", False)
+        with caplog.at_level(logging.WARNING, logger="tslearn_spark.ckernel"):
+            assert ck.lib_or_none() is None
+            assert ck.lib_or_none() is None
+        recs = [r for r in caplog.records if r.name == "tslearn_spark.ckernel"]
+        if kill_switch == "0":
+            assert recs == []
+        else:
+            assert len(recs) == 1
+            assert recs[0].levelno == logging.WARNING
+            msg = recs[0].getMessage()
+            assert "CalledProcessError" in msg
+            assert ("fatal: no such flag" in msg) == (cc != "/bin/false")
+        rs = np.random.RandomState(8)
+        aa = [rs.randn(n) for n in (9, 30, 1)]
+        bb = [rs.randn(n) for n in (12, 25, 7)]
+        got = K.dtw_banded_batch_mixed(aa, bb, 2)
+        want = [K.dtw(a, b, sakoe_chiba_radius=2) for a, b in zip(aa, bb)]
+        assert got.tolist() == want

@@ -4,7 +4,9 @@ These are the reference's own documented guarantees: LB_Keogh
 lower-bounds banded DTW (dtw_variants.py:1224-1310), PAA distance
 lower-bounds Euclidean (Keogh et al., piecewise.py:191-213), soft-DTW
 converges to squared DTW as gamma -> 0, GAK is a normalized PSD kernel,
-LCSS is a bounded similarity.
+LCSS is a bounded similarity.  Every DTW executor also equals a naive
+float64 loop of the reference recurrence bit for bit on adversarial
+inputs.
 """
 
 from __future__ import annotations
@@ -609,3 +611,94 @@ def test_sax_paa_euclidean_lower_bound_chain(seed, n_seg, alphabet, seg_sz):
     eps = 1e-9
     assert 0.0 <= d_sax <= d_paa + eps
     assert d_paa <= d_euc + eps
+
+
+# ---------------------------------------------------------------------------
+# exact DTW: every executor against a naive float64 loop of the reference
+# recurrence (dtw_variants.py:24-57), bit for bit
+# ---------------------------------------------------------------------------
+
+def _naive_dtw_matrix(a, b, radius=None, open_begin=False):
+    """Accumulated cost matrix by the reference cell loop: Python floats,
+    squared cost summed over dimensions from 0, one add per cell, cells
+    outside the Sakoe-Chiba band left at +inf."""
+    a, b = a.reshape(len(a), -1).tolist(), b.reshape(len(b), -1).tolist()
+    n1, n2 = len(a), len(b)
+    C = [[np.inf] * (n2 + 1) for _ in range(n1 + 1)]
+    C[0] = [0.0] * (n2 + 1) if open_begin else [0.0] + [np.inf] * n2
+    for i in range(n1):
+        if radius is None:
+            lo, hi = 0, n2 - 1
+        elif n1 > n2:
+            lo, hi = i - (n1 - n2 + radius), i + radius
+        else:
+            lo, hi = i - radius, i + (n2 - n1 + radius)
+        for j in range(max(lo, 0), min(hi, n2 - 1) + 1):
+            cost = 0.0
+            for x, y in zip(a[i], b[j]):
+                cost += (x - y) * (x - y)
+            C[i + 1][j + 1] = cost + min(C[i][j + 1], C[i + 1][j], C[i][j])
+    return np.array(C)[1:, 1:]
+
+
+def _adversarial_pairs(d):
+    """Inputs where a row-prefix reformulation of DTW cancels: wide-range
+    near-duplicates, one matched spike per series; plus length-1 series
+    and 1:120 length ratios."""
+    rs = np.random.RandomState(31 + d)
+
+    def walk(n):
+        w = np.cumsum(rs.randn(n, d), axis=0)
+        return w / np.ptp(w) * 1e4
+
+    aa, bb = [], []
+    for _ in range(6):  # range ~1e4, noise 1e-4
+        a = walk(rs.randint(40, 90))
+        aa.append(a)
+        bb.append(a + rs.randn(*a.shape) * 1e-4)
+    for _ in range(4):  # one matched spike, slightly shifted
+        n1, n2 = rs.randint(20, 50), rs.randint(20, 50)
+        a, b = rs.rand(n1, d) * 0.1, rs.rand(n2, d) * 0.1
+        a[rs.randint(n1)] += 1e7
+        b[rs.randint(n2)] += 1e7 + 1e-3
+        aa.append(a)
+        bb.append(b)
+    for n1, n2 in ((1, 1), (1, 40), (40, 1), (1, 120), (120, 1), (2, 120)):
+        aa.append(walk(n1) if n1 > 1 else rs.randn(1, d) * 1e4)
+        bb.append(walk(n2) if n2 > 1 else rs.randn(1, d) * 1e4)
+    if d == 1:
+        aa, bb = [a[:, 0] for a in aa], [b[:, 0] for b in bb]
+    return aa, bb
+
+
+@pytest.mark.parametrize("d", [1, 3])
+@pytest.mark.parametrize("radius", [None, 0, 5])
+def test_dtw_matches_naive_recurrence_exactly(d, radius, monkeypatch):
+    import tslearn_spark.ckernel as ck
+
+    aa, bb = _adversarial_pairs(d)
+    want2 = np.array([_naive_dtw_matrix(a, b, radius)[-1, -1]
+                      for a, b in zip(aa, bb)])
+    want = np.sqrt(want2)
+    assert np.isfinite(want).all()
+
+    if ck.lib_or_none() is not None:
+        assert ck.dtw_batch(aa, bb, radius).tolist() == want.tolist()
+        idx = np.arange(len(aa))
+        got = ck.dtw_index(ck.flatten(aa), ck.flatten(bb), idx, idx, radius)
+        assert got.tolist() == want.tolist()
+
+    with monkeypatch.context() as m:  # the numpy batcher
+        m.setattr(ck, "_lib", None)
+        m.setattr(ck, "_tried", True)
+        got = K.dtw_banded_batch_mixed(aa, bb, radius)
+    assert got.tolist() == want.tolist()
+
+    for a, b, w, w2 in zip(aa, bb, want, want2):
+        assert K.dtw(a, b, sakoe_chiba_radius=radius) == w
+        assert K.dtw_path(a, b, sakoe_chiba_radius=radius)[1] == w
+        assert K.dtw_path_from_metric(a, b, metric="sqeuclidean",
+                                      sakoe_chiba_radius=radius)[1] == w2
+        if radius is None:
+            assert (K.subsequence_cost_matrix(a, b)
+                    == _naive_dtw_matrix(a, b, open_begin=True)).all()

@@ -81,8 +81,8 @@ XFAIL: dict[str, str] = {
     "paths and the euclidean init ValueError)",
     "test_metrics.py::test_softdtw": "one-ulp: asserts EXACT equality "
     "between dtw_path's sqrt-then-squared score and the gamma=0 "
-    "soft-DTW accumulation; the row-scan DTW and anti-diagonal soft "
-    "pass accumulate in different orders (values agree to 1 ulp, "
+    "soft-DTW accumulation; both come from the same forward pass, but "
+    "sqrt then square need not round-trip (values agree to 1 ulp, "
     "assert_allclose-level agreement is pinned by our own kernels "
     "tests)",
 }

@@ -14,12 +14,12 @@
  * lanes advance together in absolute column coordinates; every row
  * buffer is stored [column][lane], so one column of the row is 12
  * contiguous doubles (three 4-wide AVX2 vectors).  Each lane keeps its
- * own Sakoe-Chiba window [lo, hi]; a column outside it is masked per
- * lane (left of lo: running state reset; right of hi: +inf).  The row
- * sweep is the union of the live lanes' windows; columns inside every
- * live lane's window skip the masks.  The in-row `left` dependence is a
- * serial chain per lane, but the 12 lanes are independent chains, so
- * the sweep is bound by throughput rather than by one chain's latency.
+ * own Sakoe-Chiba window [lo, hi]; a cell outside it is +inf, per
+ * lane.  The row sweep is the union of the live lanes' windows; columns
+ * inside every live lane's window skip the mask.  The in-row `left`
+ * dependence is a serial chain per lane, but the 12 lanes are
+ * independent chains, so the sweep is bound by throughput rather than
+ * by one chain's latency.
  * The B side of a group is transposed into the same [column][dim][lane]
  * layout once per group; the A side is gathered once per row.
  *
@@ -31,25 +31,23 @@
  * than the 2-wide instantiation.  Every min is the minpd instruction,
  * which computes exactly `x < y ? x : y`.
  *
- * Numerics.  BIT-IDENTICAL to the numpy kernels
- * (kernels.dtw_banded_batch_mixed / dtw_full_batch_mixed) on the
- * non-abandoned path: the numpy kernels vectorize the in-row `left`
- * dependence with the prefix identity
- *     row[k] = s[k] + min_{j<=k}(a[j] - s[j]),
- * s = inclusive cumsum(Dw), a[k] = Dw[k] + min(up, diag), and this file
- * computes the SAME expressions in the SAME order (sequential running
- * sum s, running min m of (a - s), row = s + m), so every intermediate
- * double rounds identically.  Row 0 runs the same update against a
- * virtual previous row that is 0 at column -1 and +inf elsewhere, which
- * gives m = 0 and row = s, i.e. numpy's cumsum row.  min/sqrt are exact
- * IEEE ops; compile with -ffp-contract=off so no FMA re-rounds the
- * subtract-square local cost.
+ * Numerics.  Each cell is the reference recurrence with one add,
+ *     R[i][j] = dw + min(min(up, diag), left),
+ * dw the squared distance summed over dimensions from 0 (dw += t * t).
+ * min is exact and each cell does one correctly rounded add of exact
+ * operands, so any traversal order gives the same bits: the result is
+ * BIT-IDENTICAL to the numpy forward pass (kernels._dtw_forward, which
+ * walks anti-diagonals and builds dw in the same dimension order) on
+ * the non-abandoned path.  Row 0 runs the same update against a virtual
+ * previous row that is 0 at column -1 and +inf elsewhere.  min/sqrt are
+ * exact IEEE ops; compile with -ffp-contract=off so no FMA re-rounds
+ * the subtract-square local cost.
  *
  * tau2 early abandon: a pair whose running band minimum exceeds its cap
- * after a row is reported +inf immediately (the numpy kernel defers the
- * inf until a batch compaction fires, so it sometimes returns the true
- * value instead — callers treat both as "provably worse than the
- * current top-k", and tests pin that either answer is accepted).
+ * after a row is reported +inf immediately.  The numpy path ignores the
+ * caps and returns the exact value; callers treat both as "provably
+ * worse than the current top-k", and tests pin that either answer is
+ * accepted.
  *
  * radius < 0 means unconstrained (full window): wlo/whi are set so lo
  * == 0 and hi == lb-1 on every row.
@@ -64,12 +62,11 @@
  * with the vector types vd/vm and the exact min VMIN of that width.
  * Selects are mask arithmetic because C has no vector ?:.
  *
- * DTW_SWEEP runs columns [j0, j1] of one DP row.  The running state
- * (s, m) and the row minimum mn live in vd arrays of the enclosing
- * function.  MASKED applies the per-lane windows: left of lo the lane's
- * running state is held at its row-start value (s = 0, m = +inf), right
- * of hi its cell is +inf.  Columns inside every live lane's window skip
- * both masks. */
+ * DTW_SWEEP runs columns [j0, j1] of one DP row.  The row's previous
+ * cell `left` and the row minimum mn live in vd arrays of the enclosing
+ * function.  MASKED applies the per-lane windows: a cell left of lo or
+ * right of hi is +inf.  Columns inside every live lane's window skip
+ * the mask. */
 #define SEL(mask, x, y) ((vd) (((mask) & (vm) (x)) | (~(mask) & (vm) (y))))
 
 #define DTW_SWEEP(VMIN, j0, j1, D, MASKED)                                   \
@@ -88,21 +85,10 @@
             }                                                                \
             vd u = *(const vd *) (up + W * v);                               \
             vd g = *(const vd *) (dg + W * v);                               \
-            vd av = dw + VMIN(u, g);                                         \
-            vd sn = s[v] + dw;                                               \
-            vd t = av - sn;                                                  \
-            vd mm = VMIN(t, m[v]);                                           \
-            vd rv;                                                           \
-            if (MASKED) {                                                    \
-                vm lead = jd < vlo[v];                                       \
-                s[v] = (vd) (~lead & (vm) sn);                               \
-                m[v] = SEL(lead, inf, mm);                                   \
-                rv = SEL(jd > vhi[v], inf, s[v] + m[v]);                     \
-            } else {                                                         \
-                s[v] = sn;                                                   \
-                m[v] = mm;                                                   \
-                rv = sn + mm;                                                \
-            }                                                                \
+            vd rv = dw + VMIN(VMIN(u, g), left[v]);                          \
+            if (MASKED)                                                      \
+                rv = SEL((jd < vlo[v]) | (jd > vhi[v]), inf, rv);            \
+            left[v] = rv;                                                    \
             *(vd *) (r + W * v) = rv;                                        \
             mn[v] = VMIN(rv, mn[v]);                                         \
         }                                                                    \
@@ -135,11 +121,10 @@ NAME(const double *restrict Bt, const double *restrict P,                    \
     typedef long long vm __attribute__((vector_size(8 * W)));                \
     const vd zero = {0.0};                                                   \
     const vd inf = zero + INFINITY;                                          \
-    vd s[LANES / W], m[LANES / W], mn[LANES / W];                            \
+    vd left[LANES / W], mn[LANES / W];                                       \
     vd vlo[LANES / W], vhi[LANES / W];                                       \
     for (int v = 0; v < LANES / W; v++) {                                    \
-        s[v] = zero;                                                         \
-        m[v] = inf;                                                          \
+        left[v] = inf;                                                       \
         mn[v] = inf;                                                         \
         vlo[v] = *(const vd *) (lo + W * v);                                 \
         vhi[v] = *(const vd *) (hi + W * v);                                 \

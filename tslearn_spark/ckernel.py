@@ -19,16 +19,21 @@ flattening each list once and passing the identity pairs sorted by
 
 Everything is best-effort: no compiler, a failed compile, or
 ``TSLEARN_SPARK_CKERNEL=0`` leaves ``lib_or_none()`` returning None and
-the numpy kernels run unchanged (``kernels._dtw_c_or_none`` logs a
-warning when a loaded kernel raises).  The compiled DP is bit-identical
-to the numpy kernel on non-abandoned pairs (see the .c header; pinned by
-tests/test_ckernel.py), so which path executed does not change results.
+the numpy kernels run unchanged.  A build or load that fails logs one
+``tslearn_spark.ckernel`` WARNING with the exception and the tail of the
+compiler's stderr (the kill switch stays silent);
+``kernels._dtw_c_or_none`` logs one when a loaded kernel raises.  Both
+engines run the reference recurrence with one add per cell, so the
+compiled DP is bit-identical to the numpy forward pass on non-abandoned
+pairs (see the .c header; pinned by tests/test_ckernel.py) and which
+path executed does not change results.
 """
 
 from __future__ import annotations
 
 import ctypes
 import hashlib
+import logging
 import os
 import subprocess
 import tempfile
@@ -44,6 +49,7 @@ _CC = os.environ.get("TSLEARN_SPARK_CC", "gcc")
 # IEEE double arithmetic on both sides.
 _CFLAGS = ["-O3", "-ffp-contract=off", "-shared", "-fPIC"]
 
+_log = logging.getLogger(__name__)
 _lock = threading.Lock()
 _lib = None
 _tried = False
@@ -113,7 +119,8 @@ def lib_or_none():
                     tmp = f"{so}.tmp.{os.getpid()}"
                     subprocess.run(
                         [_CC, *_CFLAGS, "-o", tmp, _SRC, "-lm"],
-                        check=True, capture_output=True, timeout=120)
+                        check=True, capture_output=True, text=True,
+                        timeout=120)
                     os.replace(tmp, so)
                 cand = ctypes.CDLL(so)
                 cand.dtw_index.restype = None
@@ -128,7 +135,15 @@ def lib_or_none():
                     _F64P,                      # out
                 ]
                 lib = cand
-            except Exception:
+            except Exception as exc:
+                # the numpy kernels are ~100x slower: say why, once
+                err = getattr(exc, "stderr", None) or ""
+                if isinstance(err, bytes):  # TimeoutExpired keeps bytes
+                    err = err.decode(errors="replace")
+                _log.warning("C DTW kernel unavailable, numpy kernels run "
+                             "instead: %s: %s%s", type(exc).__name__, exc,
+                             "\ncompiler stderr (tail):\n" + err[-2000:]
+                             if err else "")
                 lib = None
         _lib = lib
         _tried = True

@@ -9,15 +9,15 @@ distributed pair-join path (tslearn_spark.metrics).
 
 Implementation notes (Spark-first, not a port):
 
-* DTW uses a row-scan reformulation: with ``S = cumsum(D[i])`` the row
-  recurrence ``C[j] = min(A[j], D[i,j] + C[j-1])`` (where
-  ``A[j] = D[i,j] + min(prev[j], prev[j-1])``) telescopes to
-  ``C = S + running_min(A - S)`` — an O(sz) vectorized update per row,
-  no Python inner loop and no JIT dependency.  Constraint bands are
-  handled by slicing each row to its feasible window so no ``inf`` ever
-  enters a cumsum.
-* soft-DTW and GAK use anti-diagonal vectorization (cells of one
-  anti-diagonal depend only on the previous two).
+* DTW and soft-DTW share one forward pass, ``_dtw_forward``: the
+  reference recurrence with one add per cell, vectorized across
+  anti-diagonals (cells of one anti-diagonal depend only on the previous
+  two) and across a stack of pairs.  The accumulated matrix is stored
+  diagonal-major so every neighbour read is a slice.  Constraint bands
+  are +inf cost cells.  The C kernel (``tslearn_spark.ckernel``) runs
+  the same recurrence row by row and gives the same bits: min is exact
+  and each cell does one add.
+* GAK and LCSS use the same anti-diagonal vectorization.
 * No numba/Cython: the container has neither; numpy vectorization keeps
   per-pair cost at ~sz numpy ops.
 
@@ -193,56 +193,113 @@ def _bounds(sz1, sz2, global_constraint=None, sakoe_chiba_radius=None, itakura_m
 # squared-distance matrices
 # ---------------------------------------------------------------------------
 
+def _sq_cost(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """(n, sz1, sz2) squared Euclidean costs between the timestamps of
+    stacked pairs ``A`` (n, sz1, d) and ``B`` (n, sz2, d).
+
+    Dimensions are summed one at a time starting from 0, the order of
+    the C kernel's ``dw += t * t``, so both build the same doubles
+    (einsum may sum in another order).  The direct difference is exact
+    where the (a-b)^2 expansion would cancel.
+    """
+    D = np.zeros((A.shape[0], A.shape[1], B.shape[1]))
+    for k in range(A.shape[2]):
+        t = A[:, :, None, k] - B[:, None, :, k]
+        D += t * t
+    return D
+
+
 def sq_dist_matrix(s1: np.ndarray, s2: np.ndarray) -> np.ndarray:
     """Pairwise squared Euclidean distances between timestamps, (sz1, sz2)."""
-    s1 = to_2d(s1)
-    s2 = to_2d(s2)
-    # (a-b)^2 expansion is fast but loses precision; direct diff is exact
-    # and still vectorized: (sz1, sz2, d) intermediates are fine at ts sizes.
-    diff = s1[:, None, :] - s2[None, :, :]
-    return np.einsum("ijk,ijk->ij", diff, diff)
+    return _sq_cost(to_2d(s1)[None], to_2d(s2)[None])[0]
+
+
+def _mask_outside(D: np.ndarray, lo, hi) -> np.ndarray:
+    """Set cost cells outside the per-row inclusive column window
+    [lo, hi] to +inf (in place; ``lo``/``hi`` broadcast against the row
+    axis), so no warping path can use them."""
+    j = np.arange(D.shape[-1])
+    D[(j < lo) | (j > hi)] = np.inf
+    return D
 
 
 # ---------------------------------------------------------------------------
-# DTW (reference: dtw_variants.py:24-82, 384-465)
+# DTW / soft-DTW forward pass (reference: dtw_variants.py:24-57,
+# soft_dtw_fast.pyx:40-67)
 # ---------------------------------------------------------------------------
+
+def _grid_view(S: np.ndarray, sz2: int) -> np.ndarray:
+    """Row-major (sz1+1, sz2+1, n) view ``R[i, j] = S[i + j, i]`` of a
+    diagonal-major ``S`` (sz1+sz2+1, sz1+1, n)."""
+    _, w, n = S.shape
+    e = S.itemsize
+    return np.lib.stride_tricks.as_strided(
+        S, (w, sz2 + 1, n), ((w + 1) * n * e, w * n * e, e))
+
+
+def _dtw_forward(D: np.ndarray, gamma: float = 0.0,
+                 open_begin: bool = False) -> np.ndarray:
+    """The one DTW / soft-DTW forward pass, over a stack of cost matrices.
+
+    ``D`` is (n, sz1, sz2); cells a pair must not use are +inf.  Each
+    pair's bordered accumulated matrix R (sz1+1, sz2+1) follows the
+    reference recurrence with one add per cell::
+
+        R[i, j] = D[i-1, j-1] + softmin(R[i-1, j], R[i, j-1], R[i-1, j-1])
+
+    where softmin is ``_softmin3`` at ``gamma`` (plain min at 0, i.e.
+    DTW).  Border: R[0, 0] = 0 and +inf elsewhere, or row 0 all 0 for
+    subsequence DTW's open begin.  The result is stored diagonal-major,
+    ``S[i + j, i, p] = R_p[i, j]`` (``_grid_view`` gives the row-major
+    view): anti-diagonal k depends only on k-1 and k-2, and each of its
+    three neighbour reads is a contiguous slice.
+
+    With the min combine every cell is one correctly rounded add of
+    exact operands, so the C kernel's row sweep gives the same bits.
+    """
+    n, sz1, sz2 = D.shape
+    S = np.full((sz1 + sz2 + 1, sz1 + 1, n), np.inf)
+    R = _grid_view(S, sz2)
+    R[1:, 1:] = D.transpose(1, 2, 0)
+    R[0, 0] = 0.0
+    if open_begin:
+        R[0] = 0.0
+    for k in range(2, sz1 + sz2 + 1):
+        i0, i1 = max(1, k - sz2), min(sz1, k - 1) + 1  # cells i in [i0, i1)
+        up, left = S[k - 1, i0 - 1:i1 - 1], S[k - 1, i0:i1]
+        S[k, i0:i1] += _softmin3(up, left, S[k - 2, i0 - 1:i1 - 1], gamma)
+    return S
+
+
+def _accumulated(D: np.ndarray, gamma: float = 0.0,
+                 open_begin: bool = False) -> np.ndarray:
+    """Single-pair ``_dtw_forward`` of a (sz1, sz2) cost matrix, as the
+    classic (sz1+2, sz2+2) bordered matrix (an extra +inf last row and
+    column, which the soft-DTW backward pass uses); cell (i, j) of the
+    pair is at [i+1, j+1]."""
+    sz1, sz2 = D.shape
+    R = np.full((sz1 + 2, sz2 + 2), np.inf)
+    R[:-1, :-1] = _grid_view(_dtw_forward(D[None], gamma, open_begin),
+                             sz2)[..., 0]
+    return R
+
+
+def _dtw_end_cells(D: np.ndarray, la: np.ndarray, lb: np.ndarray,
+                   gamma: float = 0.0) -> np.ndarray:
+    """Accumulated cost at each pair's own (la, lb) cell of a zero-padded
+    stack: the recurrence only moves forward, so padded cells beyond a
+    pair's lengths never reach that cell."""
+    return _dtw_forward(D, gamma)[la + lb, la, np.arange(len(la))]
+
 
 def dtw_accumulated_matrix(s1, s2, global_constraint=None, sakoe_chiba_radius=None,
                            itakura_max_slope=None) -> np.ndarray:
-    """Full accumulated-cost matrix (squared costs), inf outside the band.
-
-    Row-scan vectorization (see module docstring) — each row is one
-    ``cumsum`` + one ``minimum.accumulate`` over its feasible window.
-    """
+    """Full accumulated-cost matrix (squared costs), inf outside the band."""
     s1, s2 = to_2d(s1), to_2d(s2)
     sz1, sz2 = s1.shape[0], s2.shape[0]
     lo, hi = _bounds(sz1, sz2, global_constraint, sakoe_chiba_radius, itakura_max_slope)
-    D = sq_dist_matrix(s1, s2)
-    C = np.full((sz1, sz2), np.inf)
-    l0, h0 = lo[0], hi[0]
-    if l0 <= h0:
-        C[0, l0:h0 + 1] = np.cumsum(D[0, l0:h0 + 1])
-    if l0 > 0:  # (0,0) outside the band: no admissible path through row 0
-        C[0, :] = np.inf
-    prev = C[0]
-    for i in range(1, sz1):
-        li, hi_i = lo[i], hi[i]
-        if hi_i < li:  # infeasible row (e.g. unfeasible itakura combo)
-            prev = C[i]
-            continue
-        d = D[i, li:hi_i + 1]
-        # A[j] = D[i,j] + min(prev[j], prev[j-1])
-        up = prev[li:hi_i + 1]
-        diag = np.empty_like(up)
-        diag[0] = prev[li - 1] if li > 0 else np.inf
-        if hi_i > li:
-            diag[1:] = prev[li:hi_i]
-        a = d + np.minimum(up, diag)
-        s = np.cumsum(d)
-        row = s + np.minimum.accumulate(a - s)
-        C[i, li:hi_i + 1] = row
-        prev = C[i]
-    return C
+    D = _mask_outside(sq_dist_matrix(s1, s2), lo[:, None], hi[:, None])
+    return _accumulated(D)[1:-1, 1:-1]
 
 
 def dtw(s1, s2, global_constraint=None, sakoe_chiba_radius=None,
@@ -252,66 +309,17 @@ def dtw(s1, s2, global_constraint=None, sakoe_chiba_radius=None,
     return float(np.sqrt(C[-1, -1]))
 
 
-# unconstrained row-scan DP works on (n, L2) rows (not the (n, L^2) grid of
-# the anti-diagonal kernels), so the sweet spot is larger than _GRID_SUBBATCH:
-# ~512 pairs keeps the ~6 live (n, L2) row buffers L2-cache-resident
-# (measured 136us/pair at 512 vs 506us/pair at 8192, events-like lengths)
-_DTW_FULL_SUBBATCH = 512
-
-
-def _dtw_full_core(A: np.ndarray, B: np.ndarray, la: np.ndarray, lb: np.ndarray) -> np.ndarray:
-    """Unconstrained DTW row-scan over padded stacks — gather-free.
-
-    With no band, every DP row spans the full B axis: `up` IS the previous
-    row and `diag` is the previous row shifted one cell right, so the two
-    take_along_axis gathers of the banded kernel (its dominant cost on
-    full-width windows) disappear.  Dead cells (k >= lb or i >= la) are
-    masked to +inf before the horizontal min-accumulate, exactly like the
-    banded kernel.
-    """
-    n, L1, d = A.shape
-    res = np.empty(n)
-    kgrid = np.arange(B.shape[1])[None, :]
-    dead_cols = kgrid >= lb[:, None]  # fixed per pair: beyond its own B
-    Bf = B[:, :, 0]
-    prev = None
-    for i in range(L1):
-        if d == 1:
-            Dw = (A[:, i, 0][:, None] - Bf) ** 2
-        else:
-            Dw = ((A[:, i : i + 1, :] - B) ** 2).sum(-1)
-        if i == 0:
-            row = np.cumsum(Dw, axis=1)
-            row[dead_cols] = np.inf
-        else:
-            dead = dead_cols | (i >= la)[:, None]
-            diag = np.empty_like(prev)
-            diag[:, 0] = np.inf
-            diag[:, 1:] = prev[:, :-1]
-            a = Dw + np.minimum(prev, diag)
-            a[dead] = np.inf
-            s = np.cumsum(Dw, axis=1)
-            with np.errstate(invalid="ignore"):
-                row = s + np.minimum.accumulate(a - s, axis=1)
-            row[dead] = np.inf
-        done = la == i + 1
-        if done.any():
-            idx = np.nonzero(done)[0]
-            res[idx] = row[idx, lb[idx] - 1]
-        prev = row
-    return np.sqrt(res)
-
-
 def _dtw_c_or_none(kernel, *args):
     """Compiled-DP dispatch (guide §4.2): ``kernel(*args)`` (a
     ``tslearn_spark.ckernel`` entry) when the C kernel is loaded, else
     None so the caller falls through to the numpy path.  Values are
-    bit-identical to the numpy kernels (tslearn_spark.ckernel docstring;
-    pinned by tests/test_ckernel.py); the C path only removes the per-row
-    numpy dispatch overhead (~120us/pair numpy vs ~4us/pair C on 4,000
-    random pairs of 64-128-length series at radius 5, one thread of a
-    4-vCPU AVX2 VM).  A kernel that raises falls back too, with one
-    WARNING per process, because the numpy path is that much slower."""
+    bit-identical to the numpy forward pass (tslearn_spark.ckernel
+    docstring; pinned by tests/test_ckernel.py); the C path only removes
+    the per-diagonal numpy dispatch overhead (~200us/pair numpy on random
+    64-128-length pairs vs ~1.5us/pair C on the knn_dtw 65 x 1,000 block,
+    radius 5, one thread of a 4-vCPU AVX2 VM).  A kernel that raises
+    falls back too, with one WARNING per process, because the numpy path
+    is that much slower."""
     global _c_fallback_warned
     from tslearn_spark import ckernel
 
@@ -345,196 +353,40 @@ def dtw_index_batch(sa, sb, ia, ib, radius: int | None = None,
                                   [sb.series(j) for j in ib], radius, tau2)
 
 
-def dtw_full_batch_mixed(arrs_a: list, arrs_b: list) -> np.ndarray:
-    """Unconstrained DTW for a mixed-shape batch: size-sorted cache-sized
-    chunks through the gather-free row scan (the radius=None fast path of
-    ``dtw_banded_batch_mixed``)."""
-    from tslearn_spark import ckernel
-
-    c = _dtw_c_or_none(ckernel.dtw_batch, arrs_a, arrs_b, None)
-    if c is not None:
-        return c
-    n = len(arrs_a)
-    la = np.fromiter((a.shape[0] for a in arrs_a), dtype=np.int64, count=n)
-    lb = np.fromiter((b.shape[0] for b in arrs_b), dtype=np.int64, count=n)
-    # size sort, not diff sort: with no band the padded cost is L1 x L2,
-    # so homogeneous (la, lb) chunks minimize padding
-    order = np.lexsort((lb, la))
-    out = np.empty(n)
-    for s in range(0, n, _DTW_FULL_SUBBATCH):
-        sel = order[s : s + _DTW_FULL_SUBBATCH]
-        A, B, sla, slb = _pad_pair_stacks(
-            [arrs_a[i] for i in sel], [arrs_b[i] for i in sel]
-        )
-        out[sel] = _dtw_full_core(A, B, sla, slb)
-    return out
-
-
 def dtw_banded_batch_mixed(arrs_a: list, arrs_b: list, radius: int | None = None,
                            tau2: np.ndarray | None = None) -> np.ndarray:
-    """Banded DTW for a batch of MIXED-shape pairs — padded, masked DP.
+    """DTW for a batch of mixed-shape pairs (pair p = arrs_a[p], arrs_b[p]),
+    Sakoe-Chiba banded at ``radius`` (sakoe_chiba_bounds semantics,
+    dtw_variants.py:906-956) or unconstrained when it is None.
 
-    With variable-length series, same-shape buckets degenerate to a
-    handful of pairs and the batch effect dies (measured ~500us/pair vs
-    ~30us here at sz 45-99).  This kernel pads every pair to (Lmax1, Lmax2), runs ONE
-    row-scan DP over the whole batch, masks cells outside each pair's
-    Sakoe-Chiba band (sakoe_chiba_bounds semantics, dtw_variants.py:906-956)
-    to +inf, and gathers each pair's result at its own (la-1, lb-1) cell.
-    Extra padded cells cost vector lanes, not Python iterations — the
-    interpreter loop is Lmax1 rows for the entire batch.
-
-    radius=None -> unconstrained DTW, delegated to the gather-free
-    full-grid row scan (``dtw_full_batch_mixed``, ~3.7x faster).
-
-    Large batches are internally split into diff-sorted cache-sized
-    chunks (W tracks |la - lb| + 2r + 1, so the diff-first sort keeps
-    each chunk's band width homogeneous): measured 152us/pair at 512 vs
-    236us/pair at 8192 on events-like lengths — callers can hand over
-    whole Arrow batches without their own sub-batching.
+    Runs the C kernel when it is loaded.  Otherwise the pairs go through
+    ``_dtw_forward`` in length-sorted, zero-padded chunks
+    (``_grid_mixed``), with each pair's out-of-band cells set to +inf.
 
     ``tau2``: optional per-pair SQUARED distance caps (early abandon).
     A pair whose running per-row band minimum exceeds its cap can never
-    finish below the cap (every warping path crosses every row), so its
-    result is reported as +inf and its vector lane is reclaimed when
-    enough of the batch is abandoned.  EXACT for top-k pruning: callers
-    pass the current k-th-best squared distance and treat +inf as
+    finish below the cap (every warping path crosses every row), so the
+    C kernel stops it and reports +inf.  The numpy path ignores the caps
+    and returns exact values.  Callers pass the current k-th-best
+    squared distance and treat both +inf and a value above the cap as
     "provably worse than the current top-k".
     """
-    if radius is None:
-        return dtw_full_batch_mixed(arrs_a, arrs_b)
     from tslearn_spark import ckernel
 
     c = _dtw_c_or_none(ckernel.dtw_batch, arrs_a, arrs_b, radius, tau2)
     if c is not None:
         return c
-    n = len(arrs_a)
-    if n > _DTW_FULL_SUBBATCH:
-        la_all = np.fromiter((a.shape[0] for a in arrs_a), dtype=np.int64, count=n)
-        lb_all = np.fromiter((b.shape[0] for b in arrs_b), dtype=np.int64, count=n)
-        order = np.lexsort((la_all, np.abs(la_all - lb_all)))
-        out = np.empty(n)
-        for s in range(0, n, _DTW_FULL_SUBBATCH):
-            sel = order[s : s + _DTW_FULL_SUBBATCH]
-            out[sel] = dtw_banded_batch_mixed(
-                [arrs_a[i] for i in sel], [arrs_b[i] for i in sel], radius,
-                tau2=None if tau2 is None else np.asarray(tau2)[sel],
-            )
-        return out
-    la = np.fromiter((a.shape[0] for a in arrs_a), dtype=np.int64, count=n)
-    lb = np.fromiter((b.shape[0] for b in arrs_b), dtype=np.int64, count=n)
-    L1, L2 = int(la.max()), int(lb.max())
-    d = arrs_a[0].shape[1] if arrs_a[0].ndim > 1 else 1
-    A = np.zeros((n, L1, d))
-    B = np.zeros((n, L2, d))
-    for p in range(n):
-        A[p, : la[p]] = arrs_a[p].reshape(la[p], d)
-        B[p, : lb[p]] = arrs_b[p].reshape(lb[p], d)
-    if radius is None:
-        # Unconstrained DTW: the window at DP row i must span the whole B
-        # axis for EVERY row, i.e. cur_lo = max(0, i - wlo) == 0 up to
-        # i = la - 1.  wlo must therefore be >= la - 1 (use L1, the batch
-        # max); using L2 here empties the window whenever a pair has
-        # la - 1 > L2 (A twice as long as every B), returning inf or a
-        # silently band-constrained (too large) distance.
-        wlo = np.full(n, L1, dtype=np.int64)
-        whi = np.full(n, L2, dtype=np.int64)
-    else:
-        r = int(radius)
-        bigger = la > lb
-        wlo = np.where(bigger, la - lb + r, r)
-        whi = np.where(bigger, r, lb - la + r)
-    # band width per pair <= wlo + whi + 1, capped by the series itself;
-    # callers sort partitions by size so |la - lb| (hence W) stays small
-    W = int(np.minimum(lb, np.minimum(wlo, L2) + np.minimum(whi, L2) + 1).max())
-    kgrid = np.arange(W)[None, :]
-    res = np.empty(n)
-    prev = np.empty((n, W))
-    prev_lo = np.zeros(n, dtype=np.int64)
-    # `keep` maps live batch lanes back to original pair indices; lanes are
-    # reclaimed (arrays compacted) when tau2 abandons enough of the batch
-    keep = np.arange(n)
-    tau2v = None if tau2 is None else np.asarray(tau2, dtype=np.float64)
-    rows_idx = np.arange(n)[:, None]
-    rows_1d = np.arange(n)
-    if d == 1:
-        # pad so a full-W window starting at any cur_lo stays in bounds,
-        # then each row's B window is ONE row-gather over the window view
-        Bp = np.zeros((n, L2 + W))
-        Bp[:, :L2] = B[:, :, 0]
-        BW = np.lib.stride_tricks.sliding_window_view(Bp, W, axis=1)
-    for i in range(L1):
-        cur_lo = np.maximum(0, i - wlo)
-        hi_i = np.minimum(lb - 1, i + whi)
-        width = hi_i - cur_lo  # inclusive: valid k in [0, width]
-        # window cost row: D[p, k] = dist(A[p, i], B[p, cur_lo[p] + k])^2
-        if d == 1:
-            # rows past a pair's la are fully dead; clamp their window
-            # start into range — the values are masked to inf below
-            Dw = (A[:, i, 0][:, None] - BW[rows_1d, np.minimum(cur_lo, L2)]) ** 2
-        else:
-            idxB = np.minimum(cur_lo[:, None] + kgrid, L2 - 1)
-            Dw = np.zeros((len(keep), W))
-            for dim in range(d):
-                Dw += (A[:, i, dim][:, None] - B[:, :, dim][rows_idx, idxB]) ** 2
-        dead = (kgrid > width[:, None]) | (i >= la)[:, None]
-        if i == 0:
-            row = np.cumsum(Dw, axis=1)
-            row[dead] = np.inf
-        else:
-            # this row's k=0 sits `shift` cells right of the previous
-            # row's k=0, and cur_lo = max(0, i - wlo) grows by 0 or 1 per
-            # DP row, so shift is BINARY.  min(up, diag) for lane k is
-            # then the min of the two ADJACENT prev cells (k+shift-1,
-            # k+shift): one adjacent-pair min over an inf-padded prev +
-            # a two-slice select replaces the (n, W) fancy-index gather
-            # (the dominant per-row cost — cf. _dtw_full_core's note) by
-            # contiguous slice arithmetic.  Out-of-range cells read the
-            # inf pad, exactly like the old okU/ok0 masks; values are
-            # bit-identical (r15, same-seed full-batch equality test).
-            shift = cur_lo - prev_lo
-            nk = prev.shape[0]
-            P = np.empty((nk, W + 2))
-            P[:, 0] = np.inf
-            P[:, 1:W + 1] = prev
-            P[:, W + 1] = np.inf
-            Q = np.minimum(P[:, :W + 1], P[:, 1:])
-            a = Dw + np.where((shift == 1)[:, None], Q[:, 1:], Q[:, :W])
-            # mask BEFORE the horizontal accumulate: a live cell must not
-            # chain off an out-of-band cell to its left
-            a[dead] = np.inf
-            s = np.cumsum(Dw, axis=1)
-            with np.errstate(invalid="ignore"):
-                row = s + np.minimum.accumulate(a - s, axis=1)
-            row[dead] = np.inf
-        done = la == i + 1
-        if done.any():
-            idx = np.nonzero(done)[0]
-            res[keep[idx]] = row[idx, lb[idx] - 1 - cur_lo[idx]]
-        if tau2v is not None and i + 1 < L1:
-            # exact early abandon: every path visits every DP row, so a
-            # running band minimum above the cap bounds the final cost
-            drop = (np.min(row, axis=1) > tau2v) & (la > i + 1)
-            # compact only when a meaningful share of lanes died — the
-            # copy is O(alive * L) and must not run every row
-            if drop.mean() > 0.25:
-                res[keep[drop]] = np.inf
-                alive = ~drop
-                keep = keep[alive]
-                if keep.size == 0:
-                    return np.sqrt(res)
-                la, lb = la[alive], lb[alive]
-                wlo, whi = wlo[alive], whi[alive]
-                A, B = A[alive], B[alive]
-                if d == 1:
-                    Bp = Bp[alive]
-                    BW = np.lib.stride_tricks.sliding_window_view(Bp, W, axis=1)
-                row, cur_lo = row[alive], cur_lo[alive]
-                tau2v = tau2v[alive]
-                rows_idx = np.arange(keep.size)[:, None]
-                rows_1d = np.arange(keep.size)
-        prev = row
-        prev_lo = cur_lo
-    return np.sqrt(res)
+
+    def core(A, B, la, lb):
+        D = _sq_cost(A, B)
+        if radius is not None:
+            i = np.arange(A.shape[1])[None, :, None]
+            r = int(radius)
+            _mask_outside(D, i - r - np.maximum(la - lb, 0)[:, None, None],
+                          i + r + np.maximum(lb - la, 0)[:, None, None])
+        return np.sqrt(_dtw_end_cells(D, la, lb))
+
+    return _grid_mixed(core, arrs_a, arrs_b)
 
 
 def _return_path(C: np.ndarray) -> list[tuple[int, int]]:
@@ -575,11 +427,11 @@ def _ground_dist_matrix(s1, s2, metric) -> np.ndarray:
     if isinstance(metric, np.ndarray):
         return metric
     s1, s2 = to_2d(s1), to_2d(s2)
-    diff = s1[:, None, :] - s2[None, :, :]
     if metric == "euclidean":
-        return np.sqrt(np.einsum("ijk,ijk->ij", diff, diff))
+        return np.sqrt(sq_dist_matrix(s1, s2))
     if metric == "sqeuclidean":
-        return np.einsum("ijk,ijk->ij", diff, diff)
+        return sq_dist_matrix(s1, s2)
+    diff = s1[:, None, :] - s2[None, :, :]
     if metric == "cityblock":
         return np.abs(diff).sum(axis=-1)
     if metric == "chebyshev":
@@ -587,25 +439,6 @@ def _ground_dist_matrix(s1, s2, metric) -> np.ndarray:
     if callable(metric):
         return np.array([[metric(a, b) for b in s2] for a in s1])
     raise ValueError(f"unknown ground metric {metric!r}")
-
-
-def _dtw_from_dist_matrix(D: np.ndarray) -> np.ndarray:
-    """Accumulated matrix from an arbitrary ground matrix
-    (dtw_variants.py:201-231 _njit_accumulated_matrix_from_dist_matrix)."""
-    sz1, sz2 = D.shape
-    C = np.empty((sz1, sz2))
-    C[0] = np.cumsum(D[0])
-    prev = C[0]
-    for i in range(1, sz1):
-        d = D[i]
-        diag = np.empty_like(prev)
-        diag[0] = np.inf
-        diag[1:] = prev[:-1]
-        a = d + np.minimum(prev, diag)
-        s = np.cumsum(d)
-        C[i] = s + np.minimum.accumulate(a - s)
-        prev = C[i]
-    return C
 
 
 def dtw_from_metric(s1, s2=None, metric="euclidean") -> float:
@@ -616,33 +449,7 @@ def dtw_from_metric(s1, s2=None, metric="euclidean") -> float:
         else s1
     if not isinstance(D, np.ndarray) or D.ndim != 2:
         D = _ground_dist_matrix(s1, s2, metric)
-    C = _dtw_from_dist_matrix(np.asarray(D, dtype=np.float64))
-    return float(C[-1, -1])
-
-
-def _dtw_from_dist_matrix_windowed(D: np.ndarray, lo: np.ndarray,
-                                   hi: np.ndarray) -> np.ndarray:
-    """Masked accumulated matrix from a ground matrix: cells outside the
-    per-row [lo, hi] window stay inf (dtw_variants.py:201-231 with the
-    compute_mask overlay).  Cell loop — path functions run driver-side
-    on single pairs, so clarity beats vectorization here."""
-    sz1, sz2 = D.shape
-    C = np.full((sz1, sz2), np.inf)
-    for i in range(sz1):
-        j0, j1 = int(lo[i]), int(hi[i])
-        for j in range(max(j0, 0), min(j1, sz2 - 1) + 1):
-            if i == 0 and j == 0:
-                C[i, j] = D[i, j]
-                continue
-            best = np.inf
-            if i > 0:
-                best = min(best, C[i - 1, j])
-            if j > 0:
-                best = min(best, C[i, j - 1])
-            if i > 0 and j > 0:
-                best = min(best, C[i - 1, j - 1])
-            C[i, j] = D[i, j] + best
-    return C
+    return float(_accumulated(np.asarray(D, dtype=np.float64))[-2, -2])
 
 
 def dtw_path_from_metric(s1, s2=None, metric="euclidean",
@@ -663,15 +470,10 @@ def dtw_path_from_metric(s1, s2=None, metric="euclidean",
 
             metric = partial(metric, **kwds)
         D = _ground_dist_matrix(s1, s2, metric)
-    D = np.asarray(D, dtype=np.float64)
-    if (global_constraint not in (None, "")
-            or sakoe_chiba_radius is not None
-            or itakura_max_slope is not None):
-        lo, hi = _bounds(D.shape[0], D.shape[1], global_constraint,
-                         sakoe_chiba_radius, itakura_max_slope)
-        C = _dtw_from_dist_matrix_windowed(D, lo, hi)
-    else:
-        C = _dtw_from_dist_matrix(D)
+    D = np.array(D, dtype=np.float64)  # a copy: masking writes into it
+    lo, hi = _bounds(D.shape[0], D.shape[1], global_constraint,
+                     sakoe_chiba_radius, itakura_max_slope)
+    C = _accumulated(_mask_outside(D, lo[:, None], hi[:, None]))[1:-1, 1:-1]
     return _return_path(C), float(C[-1, -1])
 
 
@@ -736,22 +538,9 @@ def lcss_path_from_metric(s1, s2=None, eps: float = 1.0, metric="euclidean",
 
 def subsequence_cost_matrix(subseq, longseq) -> np.ndarray:
     """Open-begin accumulated matrix: free first row (dtw_variants.py:746-780)."""
-    subseq, longseq = to_2d(subseq), to_2d(longseq)
     D = sq_dist_matrix(subseq, longseq)
-    sz1, sz2 = D.shape
-    C = np.empty((sz1, sz2))
-    C[0] = D[0]  # open begin: each column may start a match
-    prev = C[0]
-    for i in range(1, sz1):
-        d = D[i]
-        diag = np.empty_like(prev)
-        diag[0] = np.inf
-        diag[1:] = prev[:-1]
-        a = d + np.minimum(prev, diag)
-        s = np.cumsum(d)
-        C[i] = s + np.minimum.accumulate(a - s)
-        prev = C[i]
-    return C
+    # open begin: a zero border row lets each column start a match
+    return _accumulated(D, open_begin=True)[1:-1, 1:-1]
 
 
 def subsequence_path(acc_cost_mat: np.ndarray,
@@ -989,36 +778,16 @@ def _softmin3(a, b, c, gamma):
     return out
 
 
-def _sdtw_forward(D: np.ndarray, gamma: float) -> np.ndarray:
-    """Anti-diagonal forward pass over a precomputed cost matrix
-    (soft_dtw_fast.pyx:40-67).  Returns the (sz1+2, sz2+2) accumulated
-    matrix with the classic border."""
-    sz1, sz2 = D.shape
-    R = np.full((sz1 + 2, sz2 + 2), np.inf)
-    R[0, 0] = 0.0
-    for k in range(sz1 + sz2 - 1):
-        i0 = max(0, k - sz2 + 1)
-        i1 = min(sz1 - 1, k)
-        ii = np.arange(i0, i1 + 1)
-        jj = k - ii
-        a = R[ii, jj + 1]       # R[i-1, j]
-        b = R[ii + 1, jj]       # R[i, j-1]
-        c = R[ii, jj]           # R[i-1, j-1]
-        R[ii + 1, jj + 1] = D[ii, jj] + _softmin3(a, b, c, gamma)
-    return R
-
-
 def soft_dtw(ts1, ts2, gamma: float = 1.0, return_matrix: bool = False):
     """Soft-DTW score; gamma=0 reduces to squared DTW (softdtw_variants.py:316-374).
 
-    Anti-diagonal vectorized forward pass of soft_dtw_fast.pyx:40-67.
+    The shared ``_dtw_forward`` pass at ``gamma`` (soft_dtw_fast.pyx:40-67).
     R is the (sz1+2, sz2+2) accumulated matrix with the classic border.
     Parameter names ts1/ts2 match the reference signature.
     """
-    s1, s2 = to_2d(ts1), to_2d(ts2)
-    D = sq_dist_matrix(s1, s2)
+    D = sq_dist_matrix(ts1, ts2)
     sz1, sz2 = D.shape
-    R = _sdtw_forward(D, gamma)
+    R = _accumulated(D, gamma)
     if return_matrix:
         return R
     return float(R[sz1, sz2])
@@ -1030,18 +799,16 @@ def soft_dtw_alignment(ts1, ts2, gamma: float = 1.0):
     Backward pass of soft_dtw_fast.pyx:70-104, anti-diagonal vectorized.
     Parameter names ts1/ts2 match the reference signature.
     """
-    s1, s2 = to_2d(ts1), to_2d(ts2)
-    D = sq_dist_matrix(s1, s2)
+    D = sq_dist_matrix(ts1, ts2)
     sz1, sz2 = D.shape
+    R = _accumulated(D, gamma)
+    score = float(R[sz1, sz2])
     if gamma == 0.0:
         # hard DTW: alignment is the 0/1 optimal path indicator
-        C = dtw_accumulated_matrix(s1, s2)
         E = np.zeros((sz1, sz2))
-        for (i, j) in _return_path(C):
+        for (i, j) in _return_path(R[1:-1, 1:-1]):
             E[i, j] = 1.0
-        return E, float(C[-1, -1])
-    R = _sdtw_forward(D, gamma)
-    score = float(R[sz1, sz2])
+        return E, score
     return _sdtw_backward(D, R, gamma), score
 
 
@@ -1109,7 +876,7 @@ class SoftDTW:
 
     def compute(self) -> float:
         m, n = self.D.shape
-        self.R_ = _sdtw_forward(self.D, self.gamma)
+        self.R_ = _accumulated(self.D, self.gamma)
         self.computed = True
         return float(self.R_[m, n])
 
@@ -1200,40 +967,18 @@ def gamma_soft_dtw(dataset, n_samples: int = 100, random_state=None) -> float:
 # batched anti-diagonal kernels (executor hot path for soft-DTW / GAK / LCSS)
 # ---------------------------------------------------------------------------
 
-def _sq_dist_batch(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    """(n, sz1, sz2) pairwise squared dists for a batch of pairs."""
-    diff = A[:, :, None, :] - B[:, None, :, :]
-    return np.einsum("nijk,nijk->nij", diff, diff)
-
-
 def soft_dtw_batch(A: np.ndarray, B: np.ndarray, gamma: float = 1.0,
                    la: np.ndarray | None = None,
                    lb: np.ndarray | None = None) -> np.ndarray:
-    """Batched soft-DTW scores — anti-diagonal sweep over (n, diag) slices.
-
-    Matches soft_dtw() exactly; one numpy op per anti-diagonal for the
-    whole batch instead of per pair.  With (la, lb) per-pair lengths the
-    stacks may be zero-PADDED mixed shapes: the recursion only moves
-    forward, so cells beyond a pair's (la, lb) never reach its result
-    cell — each pair's score is simply gathered at R[p, la_p, lb_p].
+    """Batched soft-DTW scores: ``_dtw_forward`` over the whole stack,
+    one numpy op per anti-diagonal for the batch.  Matches soft_dtw()
+    exactly.  With (la, lb) per-pair lengths the stacks may be
+    zero-PADDED mixed shapes (see ``_dtw_end_cells``).
     """
     n, sz1, _ = A.shape
-    sz2 = B.shape[1]
-    D = _sq_dist_batch(A, B)
-    R = np.full((n, sz1 + 2, sz2 + 2), np.inf)
-    R[:, 0, 0] = 0.0
-    for k in range(sz1 + sz2 - 1):
-        i0 = max(0, k - sz2 + 1)
-        i1 = min(sz1 - 1, k)
-        ii = np.arange(i0, i1 + 1)
-        jj = k - ii
-        a = R[:, ii, jj + 1]
-        b = R[:, ii + 1, jj]
-        c = R[:, ii, jj]
-        R[:, ii + 1, jj + 1] = D[:, ii, jj] + _softmin3(a, b, c, gamma)
     if la is None:
-        return R[:, sz1, sz2]
-    return R[np.arange(n), la, lb]
+        la, lb = np.full(n, sz1), np.full(n, B.shape[1])
+    return _dtw_end_cells(_sq_cost(A, B), la, lb, gamma)
 
 
 def gak_batch(A: np.ndarray, B: np.ndarray, sigma: float = 1.0,
@@ -1248,7 +993,7 @@ def gak_batch(A: np.ndarray, B: np.ndarray, sigma: float = 1.0,
     def _unnorm(X, Y, lx=None, ly=None):
         n, s1, _ = X.shape
         s2 = Y.shape[1]
-        d2 = _sq_dist_batch(X, Y)
+        d2 = _sq_cost(X, Y)
         kk = np.exp(-d2 / (2.0 * sigma ** 2))
         gram = kk / (2.0 - kk)
         R = np.zeros((n, s1 + 1, s2 + 1))
@@ -1284,7 +1029,7 @@ def lcss_batch(A: np.ndarray, B: np.ndarray, eps: float = 1.0,
     """
     n, sz1, _ = A.shape
     sz2 = B.shape[1]
-    match = np.sqrt(_sq_dist_batch(A, B)) <= eps
+    match = np.sqrt(_sq_cost(A, B)) <= eps
     acc = np.zeros((n, sz1 + 1, sz2 + 1), dtype=np.int64)
     for k in range(sz1 + sz2 - 1):
         i0 = max(0, k - sz2 + 1)
@@ -1413,8 +1158,11 @@ def _pad_pair_stacks(arrs_a: list, arrs_b: list):
 # full-grid anti-diagonal kernels have a cache sweet spot: the R tensor is
 # (nb, Lmax^2) floats, so ~64 pairs keeps it L2/L3-resident while still
 # amortizing the Python anti-diagonal loop (measured 10x vs per-pair and
-# vs whole-batch at 2048 pairs alike)
+# vs whole-batch at 2048 pairs alike).  Longer series get fewer pairs per
+# chunk, so a chunk's grid stays within 64 pairs of 128 x 128 cells
+# (64 pairs of 1,000-long series would take ~1 GB).
 _GRID_SUBBATCH = 64
+_GRID_CELLS = 64 * 128 * 128
 
 
 def _grid_mixed(core, arrs_a: list, arrs_b: list) -> np.ndarray:
@@ -1424,8 +1172,10 @@ def _grid_mixed(core, arrs_a: list, arrs_b: list) -> np.ndarray:
     lb = np.fromiter((b.shape[0] for b in arrs_b), dtype=np.int64, count=n)
     order = np.lexsort((lb, la))
     out = np.empty(n)
-    for s in range(0, n, _GRID_SUBBATCH):
-        sel = order[s : s + _GRID_SUBBATCH]
+    grid = max(1, int(la.max(initial=1)) * int(lb.max(initial=1)))
+    step = max(1, min(_GRID_SUBBATCH, _GRID_CELLS // grid))
+    for s in range(0, n, step):
+        sel = order[s : s + step]
         A, B, sla, slb = _pad_pair_stacks(
             [arrs_a[i] for i in sel], [arrs_b[i] for i in sel]
         )

@@ -106,6 +106,24 @@ class TestDTW:
     def test_nan_padding_trimmed(self):
         assert K.dtw([1, 2, 3, np.nan], [1, 2, 3]) == pytest.approx(0.0)
 
+    @pytest.mark.parametrize("sz1,sz2", [(20000, 5), (5, 20000)])
+    def test_long_short_pair_memory(self, sz1, sz2):
+        """The forward pass is sized by the shorter series: a 20,000 x 5
+        pair stays within a few MB in either order, where a store sized
+        by the first series would need 3.2 GB."""
+        import tracemalloc
+
+        rs = np.random.RandomState(7)
+        a, b = rs.randn(sz1), rs.randn(sz2)
+        tracemalloc.start()
+        try:
+            d = K.dtw(a, b)
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert peak < 16 * 2**20
+        assert d == K.dtw(b, a)
+
 
 class TestLimitedWarpingLength:
     def test_ldtw_geq_dtw_and_converges(self):
@@ -193,6 +211,17 @@ class TestSoftDTW:
         E, score = K.soft_dtw_alignment(a, b, gamma=1.0)
         assert score == pytest.approx(K.soft_dtw(a, b, gamma=1.0))
         assert (E >= -1e-12).all() and (E <= 1 + 1e-12).all()
+
+    @pytest.mark.parametrize("gamma", [0.0, 0.1, 1.0])
+    def test_transposed_pass_same_bits(self, gamma):
+        """The forward pass runs a pair with sz1 > sz2 on its transpose;
+        in the batch (a, b) runs untransposed beside a pair with a longer
+        second series, and both give the same bits."""
+        rs = np.random.RandomState(9)
+        a, b = rs.randn(9, 2) * 3, rs.randn(4, 2) * 3
+        batch = K.soft_dtw_batch_mixed([a, rs.randn(3, 2)],
+                                       [b, rs.randn(12, 2)], gamma)
+        assert batch[0] == K.soft_dtw(a, b, gamma)
 
     def test_grad_finite_diff(self):
         rs = np.random.RandomState(6)
@@ -851,16 +880,21 @@ class TestCKernelUnavailable:
     def test_failed_compile_is_logged(self, monkeypatch, tmp_path, caplog,
                                       cc, kill_switch):
         """A compiler that fails leaves lib_or_none() None with one
-        tslearn_spark.ckernel WARNING naming the exception and quoting
-        the compiler's stderr; the kill switch stays silent; the numpy
-        kernels answer either way."""
+        tslearn_spark.ckernel WARNING naming the exception; the kill
+        switch stays silent; the numpy kernels answer either way.
+        ``/bin/false`` fails already at ``--version``; the "noisy" fake
+        compiler answers ``--version`` and fails the build, and the
+        warning quotes the build's stderr."""
         import logging
 
         import tslearn_spark.ckernel as ck
 
         if cc == "noisy":
             cc = tmp_path / "cc"
-            cc.write_text("#!/bin/sh\necho 'cc: fatal: no such flag' >&2\nexit 1\n")
+            cc.write_text(
+                "#!/bin/sh\n"
+                "if [ \"$1\" = --version ]; then echo 'fakecc 1.0'; exit 0; fi\n"
+                "echo 'cc: fatal: no such flag' >&2\nexit 1\n")
             cc.chmod(0o755)
         monkeypatch.setattr(ck, "_CC", str(cc))
         monkeypatch.setenv("TSLEARN_SPARK_CK_DIR", str(tmp_path))
@@ -878,7 +912,9 @@ class TestCKernelUnavailable:
             assert recs[0].levelno == logging.WARNING
             msg = recs[0].getMessage()
             assert "CalledProcessError" in msg
-            assert ("fatal: no such flag" in msg) == (cc != "/bin/false")
+            built = cc != "/bin/false"  # the build command carries -o
+            assert ("'-o'" in msg) == built
+            assert ("fatal: no such flag" in msg) == built
         rs = np.random.RandomState(8)
         aa = [rs.randn(n) for n in (9, 30, 1)]
         bb = [rs.randn(n) for n in (12, 25, 7)]

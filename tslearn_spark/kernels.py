@@ -228,15 +228,6 @@ def _mask_outside(D: np.ndarray, lo, hi) -> np.ndarray:
 # soft_dtw_fast.pyx:40-67)
 # ---------------------------------------------------------------------------
 
-def _grid_view(S: np.ndarray, sz2: int) -> np.ndarray:
-    """Row-major (sz1+1, sz2+1, n) view ``R[i, j] = S[i + j, i]`` of a
-    diagonal-major ``S`` (sz1+sz2+1, sz1+1, n)."""
-    _, w, n = S.shape
-    e = S.itemsize
-    return np.lib.stride_tricks.as_strided(
-        S, (w, sz2 + 1, n), ((w + 1) * n * e, w * n * e, e))
-
-
 def _dtw_forward(D: np.ndarray, gamma: float = 0.0,
                  open_begin: bool = False) -> np.ndarray:
     """The one DTW / soft-DTW forward pass, over a stack of cost matrices.
@@ -249,26 +240,39 @@ def _dtw_forward(D: np.ndarray, gamma: float = 0.0,
 
     where softmin is ``_softmin3`` at ``gamma`` (plain min at 0, i.e.
     DTW).  Border: R[0, 0] = 0 and +inf elsewhere, or row 0 all 0 for
-    subsequence DTW's open begin.  The result is stored diagonal-major,
-    ``S[i + j, i, p] = R_p[i, j]`` (``_grid_view`` gives the row-major
-    view): anti-diagonal k depends only on k-1 and k-2, and each of its
-    three neighbour reads is a contiguous slice.
+    subsequence DTW's open begin.  Returns the (sz1+1, sz2+1, n) stack of
+    R as a view of a diagonal-major store ``S[i + j, i, p] = R_p[i, j]``:
+    anti-diagonal k depends only on k-1 and k-2, and each of its three
+    neighbour reads is a contiguous slice.
 
-    With the min combine every cell is one correctly rounded add of
-    exact operands, so the C kernel's row sweep gives the same bits.
+    S is indexed by the shorter side, so it holds
+    (sz1+sz2+1)(min(sz1, sz2)+1) cells per pair: when sz1 > sz2 the pass
+    runs on the transposed costs and returns the transposed view.  Up and
+    left trade places there, and min and softmin are symmetric in them,
+    so the bits are the same.  With the min combine every cell is one
+    correctly rounded add of exact operands, so the C kernel's row sweep
+    gives the same bits too.
     """
     n, sz1, sz2 = D.shape
+    swap = sz1 > sz2
+    if swap:
+        D, sz1, sz2 = D.transpose(0, 2, 1), sz2, sz1
     S = np.full((sz1 + sz2 + 1, sz1 + 1, n), np.inf)
-    R = _grid_view(S, sz2)
+    e, w = S.itemsize, sz1 + 1
+    R = np.lib.stride_tricks.as_strided(
+        S, (w, sz2 + 1, n), ((w + 1) * n * e, w * n * e, e))
     R[1:, 1:] = D.transpose(1, 2, 0)
     R[0, 0] = 0.0
-    if open_begin:
-        R[0] = 0.0
+    if open_begin:  # the pair's row 0 is column 0 of its transpose
+        if swap:
+            R[:, 0] = 0.0
+        else:
+            R[0] = 0.0
     for k in range(2, sz1 + sz2 + 1):
         i0, i1 = max(1, k - sz2), min(sz1, k - 1) + 1  # cells i in [i0, i1)
         up, left = S[k - 1, i0 - 1:i1 - 1], S[k - 1, i0:i1]
         S[k, i0:i1] += _softmin3(up, left, S[k - 2, i0 - 1:i1 - 1], gamma)
-    return S
+    return R.transpose(1, 0, 2) if swap else R
 
 
 def _accumulated(D: np.ndarray, gamma: float = 0.0,
@@ -279,8 +283,7 @@ def _accumulated(D: np.ndarray, gamma: float = 0.0,
     pair is at [i+1, j+1]."""
     sz1, sz2 = D.shape
     R = np.full((sz1 + 2, sz2 + 2), np.inf)
-    R[:-1, :-1] = _grid_view(_dtw_forward(D[None], gamma, open_begin),
-                             sz2)[..., 0]
+    R[:-1, :-1] = _dtw_forward(D[None], gamma, open_begin)[..., 0]
     return R
 
 
@@ -289,7 +292,7 @@ def _dtw_end_cells(D: np.ndarray, la: np.ndarray, lb: np.ndarray,
     """Accumulated cost at each pair's own (la, lb) cell of a zero-padded
     stack: the recurrence only moves forward, so padded cells beyond a
     pair's lengths never reach that cell."""
-    return _dtw_forward(D, gamma)[la + lb, la, np.arange(len(la))]
+    return _dtw_forward(D, gamma)[la, lb, np.arange(len(la))]
 
 
 def dtw_accumulated_matrix(s1, s2, global_constraint=None, sakoe_chiba_radius=None,
@@ -1158,11 +1161,8 @@ def _pad_pair_stacks(arrs_a: list, arrs_b: list):
 # full-grid anti-diagonal kernels have a cache sweet spot: the R tensor is
 # (nb, Lmax^2) floats, so ~64 pairs keeps it L2/L3-resident while still
 # amortizing the Python anti-diagonal loop (measured 10x vs per-pair and
-# vs whole-batch at 2048 pairs alike).  Longer series get fewer pairs per
-# chunk, so a chunk's grid stays within 64 pairs of 128 x 128 cells
-# (64 pairs of 1,000-long series would take ~1 GB).
+# vs whole-batch at 2048 pairs alike)
 _GRID_SUBBATCH = 64
-_GRID_CELLS = 64 * 128 * 128
 
 
 def _grid_mixed(core, arrs_a: list, arrs_b: list) -> np.ndarray:
@@ -1172,10 +1172,8 @@ def _grid_mixed(core, arrs_a: list, arrs_b: list) -> np.ndarray:
     lb = np.fromiter((b.shape[0] for b in arrs_b), dtype=np.int64, count=n)
     order = np.lexsort((lb, la))
     out = np.empty(n)
-    grid = max(1, int(la.max(initial=1)) * int(lb.max(initial=1)))
-    step = max(1, min(_GRID_SUBBATCH, _GRID_CELLS // grid))
-    for s in range(0, n, step):
-        sel = order[s : s + step]
+    for s in range(0, n, _GRID_SUBBATCH):
+        sel = order[s : s + _GRID_SUBBATCH]
         A, B, sla, slb = _pad_pair_stacks(
             [arrs_a[i] for i in sel], [arrs_b[i] for i in sel]
         )
